@@ -203,9 +203,16 @@ object Bench {
         // "note": cal_ms is a single-thread CPU proxy — it normalizes
         // host compute speed, not shuffle/IO contention; flags are
         // triage signals, the remeasured median is the adjudicator
-        println(s"""{"metric":"flagged","reflag":$reflag,"floor_file":"$floorFile","cal_ms":$calMs,"note":"cal_ms is a single-thread CPU proxy; IO/shuffle contention is not normalized","n":${entries.size},"queries":${entries.mkString("{", ",", "}")}}""")
+        println(s"""{"metric":"flagged","reflag":$reflag,"floor_file":"$floorFile","cal_ms":$calMs,"note":"cal_ms is a single-thread CPU proxy; IO/shuffle contention is not normalized","n":${entries.size},"flagged":${entries.mkString("{", ",", "}")}}""")
       case None => ()
     }
+    // Readers of stdout take the LAST line with a "queries" key as the
+    // numeric per-query map: the triage line above names its map
+    // "flagged", and the full map is re-emitted here at 3 dp.
+    val qs3 = sorted.map { case (k, v) =>
+      "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    }.mkString("{", ",", "}")
+    println(s"""{"metric":"queries","unit":"sec","queries":$qs3}""")
     // Short last line: the summary must always fit the tail capture.
     println(s"""{"metric":"summary","total":$total,"n":${results.size},"reps":$reps,"cal_ms":$calMs,"failed":$failedJson,"unit":"sec","sf":"$sfDir"}""")
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.GraftStorage
 import graft.ops.{TextClean, TweetGraphPipeline}
 import graft.tweets.TweetSchema
 import org.apache.spark.sql.SparkSession
@@ -84,31 +85,37 @@ object Main {
     // runs (sbt runMain, tests) default to all local cores
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master("local[*]")).getOrCreate()
-    try {
-      println(s"Starting the processing of the file: ${args.inputFile}")
-      val tweets = TweetSchema.read(spark, args.inputFile)
-      val g = TweetGraphPipeline.build(tweets, args.jaccardThreshold,
-        args.onlyTagsFromNotRetweetedPosts)
+    try run(spark, args) finally spark.stop()
+  }
 
-      if (args.saveWordCloud) {
-        println("Saving word cloud")
-        if (args.stemWordCloud) graft.functions.VectorFunctions.register(spark)
-        TextClean.save(TextClean.wordcloudText(tweets, stemmed = args.stemWordCloud),
-          args.outputPath)
-      }
-      if (args.saveFullGraph) {
-        println("Saving full graph")
-        g.full.save(s"${args.outputPath}/gFull", "g")
-      }
-      if (args.savePbiReport) {
-        println("Saving Power BI report")
-        graft.ops.Report.save(g.report, args.outputPath)
-      }
-      args.idNeighbours.foreach { id =>
-        println(s"Saving neighbours of node id=$id")
-        g.neighbours(id).save(s"${args.outputPath}/id_neighbours_$id", "id")
-      }
-      println(s"Elaboration completed.\nOutput path: ${args.outputPath}")
-    } finally spark.stop()
+  /** The pipeline on `spark`, writing the outputs `args` ask for. The
+    * session is left running, with the blocks the pipeline pinned
+    * released.
+    */
+  def run(spark: SparkSession, args: Args): Unit = GraftStorage.withTracked(spark) {
+    println(s"Starting the processing of the file: ${args.inputFile}")
+    val tweets = TweetSchema.read(spark, args.inputFile)
+    val g = TweetGraphPipeline.build(tweets, args.jaccardThreshold,
+      args.onlyTagsFromNotRetweetedPosts)
+
+    if (args.saveWordCloud) {
+      println("Saving word cloud")
+      if (args.stemWordCloud) graft.functions.VectorFunctions.register(spark)
+      TextClean.save(TextClean.wordcloudText(tweets, stemmed = args.stemWordCloud),
+        args.outputPath)
+    }
+    if (args.saveFullGraph) {
+      println("Saving full graph")
+      g.full.save(s"${args.outputPath}/gFull", "g")
+    }
+    if (args.savePbiReport) {
+      println("Saving Power BI report")
+      graft.ops.Report.save(g.report, args.outputPath)
+    }
+    args.idNeighbours.foreach { id =>
+      println(s"Saving neighbours of node id=$id")
+      g.neighbours(id).save(s"${args.outputPath}/id_neighbours_$id", "id")
+    }
+    println(s"Elaboration completed.\nOutput path: ${args.outputPath}")
   }
 }

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   * ObjectHashAggregate; power-law users are the spill risk at 100 TB —
   * mitigate with a per-key cap upstream if corpus demands), one explode,
   * one groupBy(src, dst) count. The tag mapping is the shared subtree the
-  * reference recomputes per action (SURVEY.md §7.4 #6) — callers should
-  * cache it; [[TweetGraphPipeline]] does.
+  * reference recomputes per action (SURVEY.md §7.4 #6). This object
+  * caches nothing; [[TweetGraphPipeline]] caches the mapping (read by the
+  * report) and the unified edge relation holding the HT edges (read by
+  * the full-graph CSV, the report and the 2-hop neighbourhood).
   */
 object HashtagGraph {
 

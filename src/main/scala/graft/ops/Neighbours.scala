@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftStorage.Syntax
 import graft.graph.Graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,6 +21,10 @@ import org.apache.spark.sql.functions._
   *     final edge filter (`:267` vs `:271-272`);
   *   - the seed id is always in the frontier (`:265`);
   *   - vertices are re-derived from the surviving edges (`:274-276`).
+  *
+  * The 2-hop edge set is cached once: [[Graph.save]] writes the edges and
+  * then the vertices derived from them, and without the cache each of the
+  * two writes would recompute the joins and everything under them.
   */
 object Neighbours {
 
@@ -43,6 +48,7 @@ object Neighbours {
       .join(fDst, col("dst") === col("__nid_dst"), "left")
       .filter(col("__nid_src").isNotNull || col("__nid_dst").isNotNull)
       .drop("__nid_src", "__nid_dst")
+      .persistTracked()
 
     Graph(Graph.verticesOf(edges2), edges2)
   }

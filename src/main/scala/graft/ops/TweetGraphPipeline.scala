@@ -3,14 +3,21 @@ package graft.ops
 import graft.GraftStorage.Syntax
 import graft.graph.Graph
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** The full reference pipeline (constructor,
   * `RetweetTagsJaccardGraph.py:13-46`): retweet graph + hashtag graph +
   * Jaccard graph unified over a heterogeneous vertex set.
   *
-  * The per-user tag mapping feeds BOTH the Jaccard graph and the report;
-  * the reference recomputes that subtree on every action (SURVEY.md §7.4
-  * #6) — here it is cached once.
+  * Two relations are cached, once each, and every output reads them
+  * instead of re-deriving the layers from the JSON scan (the reference
+  * recomputes them on every action, SURVEY.md §7.4 #6):
+  *   - `userTags`, the per-user tag mapping: it feeds the hashtag and
+  *     Jaccard layers and the report's tag column;
+  *   - the unified edge relation `full.edges`: the three layers are
+  *     `type` filters over it, every vertex set is derived from it, and
+  *     the full-graph CSV, the report's retweet/Jaccard joins and the
+  *     2-hop neighbourhood all scan it.
   */
 final case class TweetGraphs(
     retweet: Graph,
@@ -28,13 +35,15 @@ object TweetGraphPipeline {
 
   def build(tweets: DataFrame, jaccardThreshold: Double = 0.5,
             onlyTagsFromNotRetweetedPosts: Boolean = false): TweetGraphs = {
-    val rt = RetweetGraph(tweets)
-    val (ht, tags) = HashtagGraph(tweets, onlyTagsFromNotRetweetedPosts)
-    val cachedTags = tags.persistTracked()
-    val jc = JaccardGraph(cachedTags, jaccardThreshold)
-
-    val v = rt.vertices.union(ht.vertices).union(jc.vertices).distinct()
-    val e = rt.edges.union(ht.edges).union(jc.edges).distinct()
-    TweetGraphs(rt, ht, cachedTags, jc, Graph(v, e))
+    val tags = HashtagGraph.userTags(tweets, onlyTagsFromNotRetweetedPosts).persistTracked()
+    // no distinct: each layer is unique on (src, dst) by its own groupBy,
+    // and the layers differ in `type`
+    val edges = RetweetGraph.edges(tweets)
+      .union(HashtagGraph.edges(tags))
+      .union(JaccardGraph.edges(tags, jaccardThreshold))
+      .persistTracked()
+    val full = Graph(Graph.verticesOf(edges), edges)
+    def layer(edgeType: String) = full.filterEdges(col("type") === edgeType).withDerivedVertices
+    TweetGraphs(layer("RT"), layer("HT"), tags, layer("JC"), full)
   }
 }

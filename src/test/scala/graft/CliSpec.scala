@@ -1,15 +1,15 @@
 package graft
 
 import graft.cli.Main
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests for the CLI argument surface (`cli/Main.parse`) against the
   * reference's argparse definition (reference `main.py:28-40`) — including
   * its exact flag spellings, the snake_case forms, the `retweetted`
   * double-t typo, and the `--no-*` negative forms that
-  * `argparse.BooleanOptionalAction` generates.
+  * `argparse.BooleanOptionalAction` generates — and one full run of all
+  * four outputs on the golden fixture.
   */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends SparkTestBase {
 
   test("reference command line parses verbatim, including the retweetted typo") {
     // exactly as a reference user would type it (main.py:38 spells the
@@ -61,5 +61,22 @@ class CliSpec extends AnyFunSuite {
 
   test("missing input file is rejected") {
     intercept[IllegalArgumentException](Main.parse(Array("--save_full_graph")))
+  }
+
+  test("run writes all four outputs on the golden fixture and keeps the session") {
+    val out = java.nio.file.Files.createTempDirectory("cli").toString
+    Main.run(spark, Main.parse(Array("src/test/resources/tweets.jsonl",
+      "--output-path", out, "--save-full-graph", "--save-pbi-report",
+      "--save-word-cloud", "--id-neighbours", "1")))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    def rowsIn(dir: String, sep: String = ",") =
+      spark.read.option("header", "true").option("sep", sep).csv(s"$out/$dir").count()
+    assert(rowsIn("gFull/g.edges.csv") === 8)
+    assert(rowsIn("gFull/g.vertices.csv") === 7)
+    assert(rowsIn("exportPowerBI", ";") === 3)
+    assert(rowsIn("id_neighbours_1/id.edges.csv") === 5)
+    assert(rowsIn("id_neighbours_1/id.vertices.csv") === 6)
+    assert(rowsIn("wordCloud") === 6)
+    assert(!spark.sparkContext.isStopped)
   }
 }

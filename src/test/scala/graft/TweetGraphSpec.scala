@@ -2,6 +2,12 @@ package graft
 
 import graft.ops._
 import graft.tweets.TweetSchema
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end test of the reference pipeline on the hand-computable
@@ -109,5 +115,106 @@ class TweetGraphSpec extends SparkTestBase {
     assert(graphs.full.filterEdges("type = 'RT'").edges.count() === 2)
     assert(graphs.full.filterEdges(col("type") === "JC").withDerivedVertices
       .vertices.collect().map(_.getString(0)).toSet === Set("1", "3"))
+  }
+
+  /** A corpus beside the golden fixture: user 20 retweets user 10 twice
+    * (RT weight 2), tags come in accent and case variants, users 10 and
+    * 30 pass the Jaccard threshold, and user 40 shares two tags with each
+    * of them without passing it.
+    */
+  private lazy val variantTweets: DataFrame = {
+    def post(id: Long, tags: Seq[String]) =
+      s"""{"user":{"id":$id},"text":"t","hashtagEntities":[],""" +
+        s""""hashtagEntitiesArray":${tags.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    def own(id: Long, tags: String*) = post(id, tags)
+    def rt(id: Long, of: Long, tags: String*) =
+      s"""{"user":{"id":$id},"text":"r","retweeted_status":${post(of, tags)}}"""
+    val lines = Seq(
+      own(10, "Café", "Rust", "Go"),
+      rt(20, 10, "CAFE", "rust"), rt(20, 10, "CAFE", "rust"), rt(21, 10, "Café"),
+      own(30, "cafe", "RUST"),
+      own(40, "café", "rust", "x1", "x2", "x3"),
+      own(50, "Go", "GO", "gó"))
+    import spark.implicits._
+    spark.read.schema(TweetSchema.schema).json(lines.toDS())
+  }
+
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  test("derived layers equal the standalone builders; full edges are unique") {
+    for (corpus <- Seq(tweets, variantTweets)) {
+      val g = TweetGraphPipeline.build(corpus)
+      val (ht, tags) = HashtagGraph(corpus)
+      for ((derived, standalone) <- Seq(
+          g.retweet -> RetweetGraph(corpus), g.hashtag -> ht, g.jaccard -> JaccardGraph(tags))) {
+        assert(rows(derived.edges) === rows(standalone.edges))
+        assert(rows(derived.vertices) === rows(standalone.vertices))
+      }
+      val keys = g.full.edges.groupBy("src", "dst", "type").count()
+      assert(keys.filter(col("count") > 1).count() === 0)
+      assert(g.full.edges.count() === keys.count())
+    }
+    val g = TweetGraphPipeline.build(variantTweets)
+    assert(edgeSet(g.retweet.edges) === Set(("10", "20", 2.0, "RT"), ("10", "21", 1.0, "RT")))
+    assert(edgeSet(g.jaccard.edges).map(e => (e._1, e._2)) === Set(("30", "10")))
+    assert(g.hashtag.edges.select("dst").distinct().collect().map(_.getString(0)).toSet ===
+      Set("cafe", "rust", "go", "x1", "x2", "x3"))
+  }
+
+  /** Every node of an executed plan, paired with whether it sits inside
+    * the plan behind a cached relation. */
+  private def nodes(p: SparkPlan, inCache: Boolean = false): Seq[(SparkPlan, Boolean)] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan -> inCache)
+      case q: QueryStageExec => Seq(q.plan -> inCache)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan -> true)
+      case other => (other.children ++ other.subqueries).map(_ -> inCache)
+    }
+    (p -> inCache) +: kids.flatMap { case (k, c) => nodes(k, c) }
+  }
+
+  /** The Jaccard layer's self-join on `tag`, in whatever join form. */
+  private def isTagJoin(p: SparkPlan): Boolean = p match {
+    case j: BaseJoinExec =>
+      Seq(j.leftKeys, j.rightKeys).forall(ks => ks.nonEmpty && ks.forall {
+        case a: Attribute => a.name == "tag"
+        case _ => false
+      })
+    case _ => false
+  }
+
+  test("report, vertices and 2-hop edges read the cached edge relation") {
+    val g = TweetGraphPipeline.build(tweets)
+    def builderOf(df: DataFrame) = nodes(df.queryExecution.executedPlan).collectFirst {
+      case (m: InMemoryTableScanExec, false) => m.relation.cacheBuilder
+    }
+    val edgeCache = builderOf(g.full.edges)
+    assert(edgeCache.isDefined, "full.edges is not a cached relation")
+    for ((name, df) <- Seq("report" -> g.report, "full.vertices" -> g.full.vertices,
+                           "neighbours.edges" -> g.neighbours("1").edges)) {
+      df.collect()
+      val plan = nodes(df.queryExecution.executedPlan)
+      assert(plan.exists {
+        case (m: InMemoryTableScanExec, _) => m.relation.cacheBuilder eq edgeCache.get
+        case _ => false
+      }, s"$name does not scan the cached edge relation")
+      assert(!plan.exists { case (p, inCache) => !inCache && isTagJoin(p) },
+        s"$name plans the tag self-join outside a cached plan")
+      if (name == "full.vertices")
+        assert(plan.exists { case (p, inCache) => inCache && isTagJoin(p) },
+          "the tag self-join is not found even inside the cached plan")
+    }
+  }
+
+  test("a four-output run leaves no persisted RDDs after GraftStorage.clear") {
+    val out = java.nio.file.Files.createTempDirectory("fouroutputs").toString
+    val g = TweetGraphPipeline.build(tweets)
+    TextClean.save(TextClean.wordcloudText(tweets), out)
+    g.full.save(s"$out/gFull", "g")
+    Report.save(g.report, out)
+    g.neighbours("1").save(s"$out/id_neighbours_1", "id")
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    GraftStorage.clear(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 }
