@@ -1257,7 +1257,11 @@ case class Graph(vertices: DataFrame, edges: DataFrame) {
 
   /** CSV export of edges + vertices (reference S2, `bigdata/__init__.py:96-114`).
     * `coalesce(1)` instead of the reference's `repartition(1)` — same single
-    * output file without the full shuffle.
+    * output file without a shuffle, but not free: the coalesce is pushed
+    * into the stage that computes `edges` and `vertices`, so everything
+    * upstream of the last exchange runs in ONE task. When `edges` is a
+    * cached relation not yet built, that single task builds the whole
+    * cache; keep the coalesce only where a single file is the contract.
     */
   def save(path: String, prefix: String, sep: String = ","): Unit = {
     def write(df: DataFrame, p: String): Unit =
@@ -1409,11 +1413,13 @@ object Graph {
 
   /** Distinct endpoint ids of an edge set — the vertex-derivation idiom the
     * reference repeats at `RetweetTagsJaccardGraph.py:68-70,131-133,188-190`.
+    * Each edge is exploded into its two endpoints, so the edges are read
+    * once rather than once per endpoint column, and the `distinct` keeps
+    * set semantics: a self-loop gives one id, a null endpoint one null
+    * row, exactly like the union of the two projections.
     */
   def verticesOf(edges: DataFrame): DataFrame =
-    edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id")))
-      .distinct()
+    edges.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
 
   /** Skip-gram `(center, context, cnt)` pair extraction from a walk
     * relation (`walk_id`, `path`) — the word2vec/DeepWalk training-corpus

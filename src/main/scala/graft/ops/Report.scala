@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-user flat report (reference `exportReport`,
@@ -9,13 +9,23 @@ import org.apache.spark.sql.functions._
   * Jaccard-similar peers. Columns: user | hashTags | retweetUsers |
   * beRetweetUsers | jaccardUsers (arrays stringified as "[a,b,c]").
   *
-  * The reference's third join matches JC edges on EITHER endpoint with an
-  * OR condition (`:225-227`), which Spark can only plan as a
-  * BroadcastNestedLoopJoin. Rewritten (SURVEY.md J5) as a union of the two
-  * endpoint projections followed by ONE left equi-join — same semantics
-  * (`array_except(concat(collect_set(src), collect_set(dst)), [user])`
-  * ≡ collect_set over the unioned peer column minus the user), and it
-  * shuffle-joins at any scale.
+  * The reference is a cascade of three left joins, each followed by a
+  * regroup on the user AND every array collected so far (`:200-232`),
+  * and its third join matches JC edges on EITHER endpoint with an OR
+  * condition (`:225-227`), which Spark can only plan as a
+  * BroadcastNestedLoopJoin. Rewritten as one aggregation and one join:
+  *   - every RT and JC edge is exploded into a `(user, kind, other)` row
+  *     per endpoint: an RT edge gives its `src` a retweeted user and its
+  *     `dst` a be-retweeted user, a JC edge gives each endpoint the other;
+  *   - ONE `groupBy(user)` collects the three peer sets side by side with
+  *     `collect_set(when(kind = …, other))` (`collect_set` skips the
+  *     nulls of the other kinds), so no array is ever a grouping key;
+  *   - ONE left equi-join from the tag mapping keeps the reference's row
+  *     set (every tagged user, and only those), and users without a match
+  *     get `[]` exactly as the reference's `collect_set` over a null-padded
+  *     left join does.
+  * Same output as the cascade: each of its collect_sets sees the same
+  * peers for the same user, and the tag mapping is one row per user.
   *
   * Divergence (documented): collected arrays are `array_sort`ed for
   * deterministic output; the reference's array order is whatever
@@ -24,34 +34,28 @@ import org.apache.spark.sql.functions._
 object Report {
 
   def build(userTags: DataFrame, rtEdges: DataFrame, jcEdges: DataFrame): DataFrame = {
-    // J3: users this user retweeted-to (edge author→retweeter; user as src)
-    val rt = rtEdges.select(col("src"), col("dst"))
-    val step1 = userTags
-      .join(rt, userTags("id") === rt("src"), "left")
-      .select(userTags("id").as("user"), col("hts"), col("dst").as("retweeted_user"))
-      .groupBy(col("user"), col("hts")) // array-typed grouping key, as in the reference (A4)
-      .agg(array_sort(collect_set(col("retweeted_user"))).as("rt_users"))
+    // both endpoints of an edge, each with the peer it sees at the other end
+    def endpoints(edges: DataFrame, srcKind: String, dstKind: String): DataFrame =
+      edges.select(explode(array(
+        struct(col("src").as("user"), lit(srcKind).as("kind"), col("dst").as("other")),
+        struct(col("dst").as("user"), lit(dstKind).as("kind"), col("src").as("other")))).as("e"))
+        .select("e.*")
+    def peers(kind: String): Column = array_sort(collect_set(when(col("kind") === kind, col("other"))))
 
-    // J4: users who retweeted this user (user as dst)
-    val step2 = step1
-      .join(rt, step1("user") === rt("dst"), "left")
-      .groupBy(col("user"), col("hts"), col("rt_users"))
-      .agg(array_sort(collect_set(col("src"))).as("bert_users"))
+    val perUser = endpoints(rtEdges, "rt", "bert").union(endpoints(jcEdges, "jc", "jc"))
+      .groupBy(col("user"))
+      .agg(peers("rt").as("rt_users"), peers("bert").as("bert_users"),
+        array_except(peers("jc"), array(col("user"))).as("jc_users"))
 
-    // J5 rewrite: both endpoints of each JC edge → (user, peer), one equi-join
-    val peers = jcEdges.select(col("src").as("u"), col("dst").as("peer"))
-      .union(jcEdges.select(col("dst").as("u"), col("src").as("peer")))
-    val step3 = step2
-      .join(peers, step2("user") === peers("u"), "left")
-      .groupBy(col("user"), col("hts"), col("rt_users"), col("bert_users"))
-      .agg(array_sort(array_except(collect_set(col("peer")), array(col("user")))).as("jc_users"))
-
-    step3.select(
-      col("user"),
-      Normalize.stringifyArray(col("hts")).as("hashTags"),
-      Normalize.stringifyArray(col("rt_users")).as("retweetUsers"),
-      Normalize.stringifyArray(col("bert_users")).as("beRetweetUsers"),
-      Normalize.stringifyArray(col("jc_users")).as("jaccardUsers"))
+    def orEmpty(c: String): Column = coalesce(col(c), array().cast("array<string>"))
+    userTags
+      .join(perUser, userTags("id") === perUser("user"), "left")
+      .select(
+        userTags("id").as("user"),
+        Normalize.stringifyArray(col("hts")).as("hashTags"),
+        Normalize.stringifyArray(orEmpty("rt_users")).as("retweetUsers"),
+        Normalize.stringifyArray(orEmpty("bert_users")).as("beRetweetUsers"),
+        Normalize.stringifyArray(orEmpty("jc_users")).as("jaccardUsers"))
   }
 
   /** Power BI CSV export (`:242-243`): single file, `;` separator. */

@@ -16,8 +16,16 @@ import org.apache.spark.sql.functions.col
   *     Jaccard layers and the report's tag column;
   *   - the unified edge relation `full.edges`: the three layers are
   *     `type` filters over it, every vertex set is derived from it, and
-  *     the full-graph CSV, the report's retweet/Jaccard joins and the
+  *     the full-graph CSV, the report's retweet/Jaccard rows and the
   *     2-hop neighbourhood all scan it.
+  *
+  * The edge cache holds `spark.sql.shuffle.partitions` partitions. The
+  * union of the three layers has the sum of their partition counts, and
+  * AQE never coalesces a cached plan's partitions
+  * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is off by
+  * default), so without the `coalesce` every reader of the cache would
+  * run three times the session's tasks, each one paying a fixed
+  * deserialization cost for a sliver of data.
   */
 final case class TweetGraphs(
     retweet: Graph,
@@ -36,11 +44,13 @@ object TweetGraphPipeline {
   def build(tweets: DataFrame, jaccardThreshold: Double = 0.5,
             onlyTagsFromNotRetweetedPosts: Boolean = false): TweetGraphs = {
     val tags = HashtagGraph.userTags(tweets, onlyTagsFromNotRetweetedPosts).persistTracked()
+    val partitions = tweets.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // no distinct: each layer is unique on (src, dst) by its own groupBy,
     // and the layers differ in `type`
     val edges = RetweetGraph.edges(tweets)
       .union(HashtagGraph.edges(tags))
       .union(JaccardGraph.edges(tags, jaccardThreshold))
+      .coalesce(partitions)
       .persistTracked()
     val full = Graph(Graph.verticesOf(edges), edges)
     def layer(edgeType: String) = full.filterEdges(col("type") === edgeType).withDerivedVertices

@@ -16,6 +16,19 @@ class GraphAlgorithmsSpec extends SparkTestBase {
     Graph(v, e)
   }
 
+  test("verticesOf: one-scan explode form ≡ the union of the two projections") {
+    val e = Seq[(String, String)](
+      ("a", "b"), ("a", "b"), // duplicate edge
+      ("c", "c"),             // self-loop
+      ("d", null), (null, "a"))
+      .toDF("src", "dst")
+    val union = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => Option(r.getString(0))).toSeq.sorted
+    assert(ids(Graph.verticesOf(e)) === ids(union))
+    assert(ids(Graph.verticesOf(e)) === Seq(None, Some("a"), Some("b"), Some("c"), Some("d")))
+  }
+
   test("degrees / inDegrees / outDegrees count edge endpoints") {
     val d = g.degrees.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(d === Map("a" -> 2L, "b" -> 2L, "c" -> 3L, "d" -> 1L, "e" -> 1L, "f" -> 1L))

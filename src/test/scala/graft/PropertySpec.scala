@@ -68,6 +68,24 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("size-carrying pairs ≡ pairsFromTagPairs on every column") {
+    trials(corpusGen, 8) { corpus =>
+      val userTags = corpus.toDF("id", "raw")
+        .groupBy("id").agg(flatten(collect_list(col("raw"))).as("raw"))
+        .select(col("id"), Normalize.normalizeTags(col("raw")).as("hts"))
+      for (minShared <- Seq(1L, 2L)) {
+        val sized = JaccardGraph.pairs(userTags, minShared)
+        val exploded = JaccardGraph.pairsFromTagPairs(
+          userTags.select(col("id"), explode(col("hts")).as("tag")), minShared)
+        assert(sized.schema.map(f => f.name -> f.dataType) ===
+          exploded.schema.map(f => f.name -> f.dataType))
+        val got = sized.collect().map(_.toSeq)
+        assert(got.length === got.distinct.length)
+        assert(got.toSet === exploded.collect().map(_.toSeq).toSet, s"minShared=$minShared")
+      }
+    }
+  }
+
   test("saltedTopK ≡ single-window top-k for any data and any salt count") {
     import graft.pipeline.Skew
     import org.apache.spark.sql.expressions.Window

@@ -6,9 +6,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Golden end-to-end test of the reference pipeline on the hand-computable
   * fixture (FIXTURES.md §1): users 1, 2, 3, 8001112; a retweet pair; two
@@ -122,19 +124,22 @@ class TweetGraphSpec extends SparkTestBase {
     * 30 pass the Jaccard threshold, and user 40 shares two tags with each
     * of them without passing it.
     */
-  private lazy val variantTweets: DataFrame = {
-    def post(id: Long, tags: Seq[String]) =
-      s"""{"user":{"id":$id},"text":"t","hashtagEntities":[],""" +
-        s""""hashtagEntitiesArray":${tags.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-    def own(id: Long, tags: String*) = post(id, tags)
-    def rt(id: Long, of: Long, tags: String*) =
-      s"""{"user":{"id":$id},"text":"r","retweeted_status":${post(of, tags)}}"""
-    val lines = Seq(
-      own(10, "Café", "Rust", "Go"),
-      rt(20, 10, "CAFE", "rust"), rt(20, 10, "CAFE", "rust"), rt(21, 10, "Café"),
-      own(30, "cafe", "RUST"),
-      own(40, "café", "rust", "x1", "x2", "x3"),
-      own(50, "Go", "GO", "gó"))
+  private lazy val variantTweets: DataFrame = corpus(
+    own(10, "Café", "Rust", "Go"),
+    rt(20, 10, "CAFE", "rust"), rt(20, 10, "CAFE", "rust"), rt(21, 10, "Café"),
+    own(30, "cafe", "RUST"),
+    own(40, "café", "rust", "x1", "x2", "x3"),
+    own(50, "Go", "GO", "gó"))
+
+  private def post(id: Long, tags: Seq[String]) =
+    s"""{"user":{"id":$id},"text":"t","hashtagEntities":[],""" +
+      s""""hashtagEntitiesArray":${tags.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+  /** A post by `id` with its own tags. */
+  private def own(id: Long, tags: String*) = post(id, tags)
+  /** User `id` retweets a post of `of` carrying `tags` (credited to `of`). */
+  private def rt(id: Long, of: Long, tags: String*) =
+    s"""{"user":{"id":$id},"text":"r","retweeted_status":${post(of, tags)}}"""
+  private def corpus(lines: String*): DataFrame = {
     import spark.implicits._
     spark.read.schema(TweetSchema.schema).json(lines.toDS())
   }
@@ -204,6 +209,41 @@ class TweetGraphSpec extends SparkTestBase {
         assert(plan.exists { case (p, inCache) => inCache && isTagJoin(p) },
           "the tag self-join is not found even inside the cached plan")
     }
+  }
+
+  test("report on a hand-checked corpus; no aggregate groups on an array") {
+    val g = TweetGraphPipeline.build(corpus(
+      own(10, "a", "b"),
+      rt(20, 10, "a", "b"), rt(20, 10, "a", "b"), // repeated retweet: one peer
+      own(20, "z"),
+      rt(30, 20, "z"), rt(30, 10, "a"),           // 30 retweets but has no tags
+      own(40, "p", "q"), own(50, "q", "p"),       // JC pair 50→40
+      own(60, "solo")))                           // tagged, no RT or JC edge
+    val got = g.report.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+    assert(got.length === 5)
+    assert(got.toSet === Set(
+      ("10", "[a,b]", "[20,30]", "[]", "[]"),
+      ("20", "[z]", "[30]", "[10]", "[]"),        // RT src and RT dst
+      ("40", "[p,q]", "[]", "[]", "[50]"),        // JC peer seen from dst ...
+      ("50", "[p,q]", "[]", "[]", "[40]"),        // ... and from src
+      ("60", "[solo]", "[]", "[]", "[]")))
+    val arrayKeyed = nodes(g.report.queryExecution.executedPlan).collect {
+      case (a: BaseAggregateExec, _) if a.groupingExpressions.exists(_.dataType.isInstanceOf[ArrayType]) => a
+    }
+    assert(arrayKeyed.isEmpty, s"aggregates grouping on an array: ${arrayKeyed.map(_.nodeName)}")
+  }
+
+  test("the edge cache holds shuffle-partitions partitions; vertices scan it once") {
+    val g = TweetGraphPipeline.build(tweets)
+    assert(g.full.edges.rdd.getNumPartitions ===
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val v = g.full.vertices
+    v.collect()
+    val scans = nodes(v.queryExecution.executedPlan).collect {
+      case (m: InMemoryTableScanExec, false) => m
+    }
+    assert(scans.length === 1)
   }
 
   test("a four-output run leaves no persisted RDDs after GraftStorage.clear") {
