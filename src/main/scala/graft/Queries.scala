@@ -3995,7 +3995,7 @@ object Queries {
     // the n² join eats the cluster. The row pins exactLimit UNDER the
     // test corpus (500 vectors at sf0.01) so the LIVE catalog plan is
     // the 100 TB regime — bucketed equi-joins, no theta join anywhere
-    // in the catalog (PlanAudit enforces it); the exact regime and the
+    // in the catalog (CatalogSweepSpec enforces it); the exact regime and the
     // count-gated switch itself are spec-pinned in DedupSpec, where the
     // regimes are asserted to agree (equal cosines) on their overlap.
     Q("q_dedup_embedding_auto",
@@ -7793,7 +7793,7 @@ object Queries {
     // the SAME band join written as the naive theta join a user would
     // type — the graft.plans.BandJoinRewrite optimizer rule (active via
     // VectorFunctions.register / GraftExtensions) turns it into the
-    // bucketed cell equi-join automatically; PlanAuditSpec fails if the
+    // bucketed cell equi-join automatically; CatalogSweepSpec fails if the
     // rewrite ever stops firing and this row regresses to a nested loop
     Q("q_band_join_auto",
       (s, d) => {
@@ -9621,7 +9621,7 @@ object Queries {
     // training only partially recover it. Sizing cells to the CLUSTER
     // count instead makes each cell one component and the within-cell
     // pairing complete per component: measured recall 1.000 at the 10×
-    // point (IvfProbe, 20k vectors, cells=16) where √n cells read
+    // point (SCALE.md Round-11, 20k vectors, cells=16) where √n cells read
     // 0.260. The occupancy price is n/16 per cell (pairing n²/16 — the
     // SemDeDup targetCellSize trade); this row pins the lever with an
     // oracle so the pair (this vs q_ann_recall_ivf_clustered) is the

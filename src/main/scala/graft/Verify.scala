@@ -10,6 +10,8 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSeq))
+      case _ => throw new IllegalArgumentException(
+        "usage: Verify <sfDir> <outDir> [name,name,...]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

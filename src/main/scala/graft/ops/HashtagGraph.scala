@@ -27,17 +27,8 @@ object HashtagGraph {
     *   (`RetweetTagsJaccardGraph.py:100-105`): when true, own-post tags are
     *   taken only from non-retweet posts (retweeted originals' tags still
     *   count toward the original author).
-    * @param saltedAgg two-stage skew-salted aggregation
-    *   ([[graft.pipeline.Skew.saltedTagSet]]) for power-law corpora: a
-    *   celebrity user's tag arrays spread over 32 `(id, salt)` partials
-    *   instead of landing on one reducer. Output is IDENTICAL — cross-salt
-    *   duplicate arrays survive the partial `collect_set`, but
-    *   [[Normalize.normalizeTags]]'s `array_distinct` removes them tag-wise
-    *   exactly as it does for the unsalted path. Off by default: the extra
-    *   shuffle only pays for itself when a hot key exists.
     */
-  def userTags(tweets: DataFrame, onlyTagsFromNotRetweetedPosts: Boolean = false,
-               saltedAgg: Boolean = false): DataFrame = {
+  def userTags(tweets: DataFrame, onlyTagsFromNotRetweetedPosts: Boolean = false): DataFrame = {
     // tags credited to the ORIGINAL author of a retweeted post (:91-95)
     val fromRetweets = tweets
       .filter(expr("retweeted_status.user.id is NOT NULL"))
@@ -57,17 +48,11 @@ object HashtagGraph {
       .filter(expr("hashtagEntities is not NULL"))
       .select(col("user.id").cast("string").as("id"), col("hashtagEntitiesArray").as("htea"))
 
-    val combined = fromOwnPosts.union(fromRetweets)
-    val grouped =
-      if (saltedAgg)
-        // (key, values: array<array<string>>) → flatten to the tag list
-        graft.pipeline.Skew.saltedTagSet(combined, col("id"), col("htea"))
-          .select(col("key").as("id"), flatten(col("values")).as("hts"))
-      else
-        combined.groupBy("id")
-          // reference D2 `flatten` UDF → native flatten (:113)
-          .agg(flatten(collect_set(col("htea"))).as("hts"))
-    grouped.withColumn("hts", Normalize.normalizeTags(col("hts")))
+    fromOwnPosts.union(fromRetweets)
+      .groupBy("id")
+      // reference D2 `flatten` UDF → native flatten (:113)
+      .agg(flatten(collect_set(col("htea"))).as("hts"))
+      .withColumn("hts", Normalize.normalizeTags(col("hts")))
   }
 
   /** Edges `(src=user, dst=tag, w=count, type="HT")` (:118-128). Weight

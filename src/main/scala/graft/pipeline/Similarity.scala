@@ -409,8 +409,8 @@ object SimilarityIvf {
 
   /** EXPECTED recall of the IVF kNN graph at `nprobe` probes — the
     * closed-form twin of [[SimilarityLsh.recallAt]] for the quantizer
-    * family, fitted to this repo's measured surface (SCALE.md r11,
-    * `cli/IvfProbe` over [[knnGraphRecallAudit]], mean top-3 recall,
+    * family, fitted to this repo's measured surface (SCALE.md Round-11,
+    * the IVF recall curve over [[knnGraphRecallAudit]], mean top-3 recall,
     * cells = `cellsFor(n)`):
     *
     *   - recall grows as √nprobe: measured 0.207→0.300→0.413 across

@@ -27,7 +27,7 @@ object BucketedTables {
       .saveAsTable(table)
 
   /** Equi-join two same-key same-bucket-count tables — plans with zero
-    * Exchange operators (verify with [[hasExchange]] / PlanAudit). The
+    * Exchange operators (verify with [[hasExchange]] / `cli.PlanDump`). The
     * MERGE hint pins a sort-merge join: bucketing exists for big⨝big
     * joins where neither side broadcasts, and at test scale the planner
     * would otherwise broadcast the small side (a BroadcastExchange —

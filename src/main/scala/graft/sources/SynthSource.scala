@@ -187,7 +187,7 @@ private[sources] class SynthScanBuilder(rows: Long, parts: Int)
       if (aggPushed) Some((aggGroupByGrp, aggFuncs)) else None)
 }
 
-// public: PlanAudit-style specs inspect `pushed`/`pushedAgg`/`planInputPartitions`
+// public: specs inspect `pushed`/`pushedAgg`/`planInputPartitions`
 class SynthScan(rows: Long, parts: Int, required: StructType,
                 val pushed: Array[Filter],
                 val pushedAgg: Option[(Boolean, Seq[SynthSource.AggSpec])] = None)

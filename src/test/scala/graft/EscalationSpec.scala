@@ -37,7 +37,7 @@ class EscalationSpec extends SparkTestBase {
       val b = SimilarityIvf.expectedRecall(cells, np + 1)
       assert(b >= a && b <= 1.0)
     }
-    // the SCALE.md r11 measured surface (cli/IvfProbe, mean top-3
+    // the SCALE.md Round-11 measured surface (the IVF recall curve, mean top-3
     // recall, cells = cellsFor(n)) — the floor model must sit AT OR
     // BELOW all nine points (conservative: it gates escalation, and an
     // optimistic model would re-open the recall-downgrade hole)

@@ -1,150 +1,28 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** The SCALE.md §4 whitelist as an executable regression: every catalog
-  * query's physical plan must be free of non-equi joins
-  * (BroadcastNestedLoopJoin / CartesianProduct) unless the query is in the
-  * documented intentional set — broadcast-scalar attachments, sketch-sized
-  * cross joins, k-row centroid quantizers, and the declared all-pairs
-  * baselines. A new operator that accidentally plans a cross join fails
-  * here instead of surviving until a human reads the PlanAudit dump.
-  *
-  * Plans are built at sf0.001 — join SELECTION depends only on statistics
-  * and hints, not row counts at this scale, and the initial (pre-AQE)
-  * physical plan is exactly what PlanAudit inspects.
+/** Scan-shape regressions on representative catalog plans: column pruning
+  * and filter pushdown must reach the parquet scans. The catalog-wide plan
+  * contracts (the SCALE.md §4 nested-loop whitelist and the global-window
+  * whitelist) are checked in [[CatalogSweepSpec]] on the same initial
+  * (pre-AQE) physical plan that [[PlanAuditSpec.initialPlanNodes]] walks.
   */
 class PlanAuditSpec extends SparkTestBase {
-
-  /** Must match SCALE.md §4 — change BOTH or neither. */
-  private val nestedLoopWhitelist = Set(
-    "q_ann_cosine", "q_ann_topk",        // broadcast(seed queries) ⨝ corpus
-    "q_ann_quantized",                   // same shape, int8-quantized vectors
-    "q_ann_ivf", "q_ann_ivf_probe", "q_ann_ivf_trained", // k-row centroid cross join
-    "q_ann_pq", "q_ann_pq_trained",      // broadcast(seed queries) ⨝ code scan (ADC)
-    "q_hybrid_rrf",                      // dense arm = broadcast(seeds) ⨝ corpus (q_ann_cosine shape)
-    "q_ann_ivfpq",                       // k-row centroid cross join; search is cell-equi
-    "q_tfidf_top_terms", "q_bm25_top_terms", "q_token_rarity",
-    "q_window_anomaly",                  // 1-row stats broadcast
-    "q_assoc_rules",                     // 1-row basket-total broadcast
-    "q_sketch_hist_quantile",
-    "q_hist_quantile_by_source",
-    "q_winsorize_stats",                 // quantile list × bin-sized sketch
-    "q_bloom_join",                      // 1-row packed-bitmap broadcast
-    "q_mix_plan",                        // two 1-row total broadcasts (waterfill)
-    "q_mix_anneal",                      // the same two broadcasts × 3 phases
-    "q_mix_temperature",                 // 1-row Σ√cnt total broadcast
-    "q_graph_modularity",                // 1-row edge-count m broadcast
-    "q_bpe_merge",                       // 1-row argmax-pair broadcast
-    "q_cooccur_lift",                    // 1-row corpus-count broadcast (×2)
-    "q_vocab_coverage",                  // 1-row token-total broadcast
-    "q_lsh_recall",                      // 1-row truth-total broadcast
-    "q_lsh_recall_predicted",            // same + the fixed-point S-curve sums
-                                         // ride the same 1-row broadcast
-    "q_graph_hits",                      // 1-row half-step max broadcast (×2/iter)
-    "q_dsir_weights", "q_dsir_select",   // 1-row model-totals broadcast
-    "q_heavy_hitters",                   // 1-row corpus-total broadcast
-    "q_sketch_join_size",                // 1-row estimate × 1-row exact audit
-    "q_sketch_selectivity",              // 1-row estimate × 1-row exact audit
-    "q_dq_benford",                      // 1-row digit-total broadcast
-    "q_negative_samples",                // 1-row cumulative-vocab-array broadcast
-    "q_tpch_q22",                        // 1-row balance-gate broadcast
-                                         // (bal·cnt > sum exact-decimal compare)
-    "q_tpch_q11",                        // 1-row mean-value-gate broadcast
-                                         // (pval·np·10 > total·12 compare)
-    "q_sketch_kmv_pairs",                // sketch relation × itself (groups²,
-                                         // k-sized arrays — never data-sized)
-    "q_sketch_kmv_containment",          // same sketch self-join, directed
-    "q_vocab_growth",                    // 5-row checkpoint relation broadcast
-                                         // (first_doc < cp range predicate)
-    "q_sparse_cosine",                   // 1-row n_docs broadcast (df cap +
-                                         // integer idf weights)
-    "q_lm_interpolated",                 // 1-row token-total broadcast (the
-                                         // unigram interpolation term)
-    "q_ann_recall_auto",                 // broadcast(50 anchors) ⨝ corpus —
-                                         // the q_ann_cosine truth shape
-    // NOTE: q_ann_recall_escalate / q_dedup_embed_recall_escalate left
-    // the whitelist in r12 — the monotone gate keeps the capped LSH
-    // there (equi-joins only); the escalations that DO fire are the
-    // *_wins/*_measured rows below
-    "q_ann_recall_ivf",                  // centroid cross join + broadcast
-                                         // (50 anchors) ⨝ corpus truth side
-    "q_ann_recall_ivf_probe",            // same shapes, nprobe=2 probe ranking
-    "q_ann_recall_ivf_trained",          // same shapes + the refined k-row
-                                         // centroid cross join
-    "q_ann_recall_ivf_clustered",        // the clustered-regime audit triple:
-    "q_ann_recall_ivf_clustered_probe",  // same centroid cross join + anchor
-    "q_ann_recall_ivf_clustered_trained", // truth shapes over the derived corpus
-    "q_ann_recall_ivf_clustered_cells16", // the cells-to-cluster-count lever —
-                                         // same shapes at 16 fixed cells
-    "q_ann_escalate_wins",               // escalated multi-probe graph: k-row
-                                         // centroid cross joins (assign + probes)
-    "q_ann_escalate_measured",           // same, on the clustered corpus
-    "q_ann_ivf_probe_auto",              // the auto-sized multi-probe twin —
-                                         // same centroid cross joins
-    "q_ann_recall_probe_auto",           // its audit: same + anchor truth side
-    "q_dedup_embed_escalate_wins",       // the multi-probe PAIR join's
-                                         // centroid cross joins
-    "q_ann_escalate_sampled",            // the sampled gate's escalated
-                                         // multi-probe graph: same k-row
-                                         // centroid cross joins (the shard
-                                         // audit runs eagerly in the gate,
-                                         // not in the returned plan)
-    "q_ann_escalate_threshold_audit",    // escalated pairs' centroid cross
-                                         // joins + broadcast(50 anchors)
-                                         // ⨝ corpus truth side
-    "q_ann_recall_pq",                   // broadcast(50 anchors) ⨝ code scan
-                                         // (ADC) + the same anchors ⨝ corpus
-                                         // exact-integer truth side
-    "q_ann_recall_pq_trained",           // same shapes, trained codebook
-    "q_ann_recall_ivfpq",                // same + the k-row centroid cross
-                                         // join (coarse assignment)
-    "q_ann_recall_ivf_hier",             // broadcast(50 anchors) ⨝ corpus
-                                         // truth side ONLY — the hier index
-                                         // itself is all equi-joins (sign-
-                                         // pattern cells, no centroid scoring)
-    "q_pipeline_e2e")                    // the embedded mix plan's two 1-row
-                                         // waterfill broadcasts (q_mix_plan)
-
-  private def collectAll(p: SparkPlan): Seq[SparkPlan] =
-    p +: (p.children ++ p.subqueries).flatMap {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)
-      case c => collectAll(c)
-    }
-
-  test("no catalog query plans a non-whitelisted nested-loop or cartesian join") {
-    val sfDir = "/root/testdata/sf0.001"
-    assume(new java.io.File(sfDir).isDirectory)
-    val offenders = scala.collection.mutable.Map.empty[String, Seq[String]]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan
-      val joins = collectAll(plan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }).map(_.nodeName).filter(n => n.contains("NestedLoop") || n.contains("Cartesian"))
-      if (joins.nonEmpty && !nestedLoopWhitelist.contains(name))
-        offenders += name -> joins
-    }
-    assert(offenders.isEmpty,
-      s"non-equi joins outside the SCALE.md §4 whitelist: $offenders")
-  }
+  import PlanAuditSpec.initialPlanNodes
 
   test("representative scans prune columns and push filters to parquet") {
     val sfDir = "/root/testdata/sf0.001"
     assume(new java.io.File(sfDir).isDirectory)
-    def scans(name: String): Seq[(String, Set[String], String)] = {
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-      collectAll(plan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }).collect { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+    def scans(name: String): Seq[(String, Set[String], String)] =
+      initialPlanNodes(SparkEntry.queries(name)(spark, sfDir)).collect { case s: FileSourceScanExec =>
         (s.relation.location.rootPaths.headOption
           .map(_.getName.stripSuffix(".parquet")).getOrElse("?"),
           s.requiredSchema.fieldNames.toSet,
           s.metadata.getOrElse("PushedFilters", "[]"))
       }
-    }
     // TPC-H Q3 shape: an 11-column lineitem must reach the scan as 4
     // columns with the shipdate range pushed; orders/customer likewise.
     // A regression here (a projection or filter stuck above the scan)
@@ -170,55 +48,22 @@ class PlanAuditSpec extends SparkTestBase {
     val emb = ann.find(_._1 == "embeddings").get
     assert(!emb._2.contains("label"), s"embeddings scan reads ${emb._2}")
   }
+}
 
-  /** Queries whose plans legitimately contain an UNPARTITIONED window —
-    * each one runs over a relation bounded by something other than the
-    * corpus (sketch bins, vocabulary, survivors, per-doc weights at
-    * demo scale), documented here so a future edit that moves a global
-    * window onto a corpus-sized relation fails this test instead of
-    * becoming a single-task sort at 100×.
-    */
-  private val globalWindowWhitelist = Set(
-    "q_skyline",            // merge rank over bucket-local frontier SURVIVORS
-    "q_vocab_coverage",     // rank over the vocabulary relation (Heaps-sublinear)
-    "q_select_budget",      // offsets window over the 64-bucket histogram
-    "q_quantile_buckets", "q_hist_quantile_by_source", "q_winsorize_stats",
-    "q_sketch_hist_quantile", // cumulative windows over bin-sized sketches
-    "q_quality_deciles",    // same histBucketize bin-sized cumulative window
-    "q_dsir_select",        // rank over the k TakeOrderedAndProject survivors
-    "q_bpe_merge", "q_bpe_pairs", "q_bpe_encode", // argmax/rank over the pair
-                            // vocabulary (≤ |vocab|², sketch-sized)
-    "q_sql_recursive",      // row_number over the per-key day ROLLUP (30 rows/key)
-    "q_kmeans", "q_dedup_semantic", "q_dedup_semantic_survivors",
-    "q_sample_diverse", "q_ann_ivf_trained", "q_ann_ivfpq", "q_ann_pq_trained",
-                            // k-row seed-centroid pick (ORDER BY vec_id LIMIT k
-                            // plans as a bounded global sort at demo scale;
-                            // production seeds documented as literals)
-    "q_global_ids", "q_bitmap_index", "q_bitmap_and", // Ids.contiguous: the
-                            // window runs over PER-PARTITION COUNTS (one row
-                            // per partition), never rows
-    "q_chisq",              // totals window over the ≤ R·C contingency cells
-    "q_negative_samples")   // cumsum over the vocabulary relation (q_vocab_coverage contract)
+object PlanAuditSpec {
 
-  test("no catalog query plans a global window over an unbounded relation") {
-    val sfDir = "/root/testdata/sf0.001"
-    assume(new java.io.File(sfDir).isDirectory)
-    val offenders = scala.collection.mutable.Map.empty[String, Int]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan
-      val globals = collectAll(plan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }).collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.isEmpty => w
-        case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-            if w.partitionSpec.isEmpty => w
-      }
-      if (globals.nonEmpty && !globalWindowWhitelist.contains(name))
-        offenders += name -> globals.size
+  private def collectAll(p: SparkPlan): Seq[SparkPlan] =
+    p +: (p.children ++ p.subqueries).flatMap {
+      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)
+      case c => collectAll(c)
     }
-    assert(offenders.isEmpty,
-      s"global (unpartitioned) windows outside the documented set: $offenders")
-  }
+
+  /** Every node of `df`'s initial (pre-AQE) physical plan, subqueries and
+    * nested adaptive plans included. Plans without executing `df`.
+    */
+  def initialPlanNodes(df: Dataset[_]): Seq[SparkPlan] =
+    collectAll(df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    })
 }

@@ -53,21 +53,6 @@ class TweetGraphSpec extends SparkTestBase {
     assert(!tags.contains("8001112")) // no tags anywhere
   }
 
-  test("salted tag-set aggregation produces identical user tags") {
-    val plain = HashtagGraph.userTags(tweets).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val salted = HashtagGraph.userTags(tweets, saltedAgg = true).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(salted === plain)
-    // and with the reference's not-retweeted-posts flag engaged
-    val plainF = HashtagGraph.userTags(tweets, onlyTagsFromNotRetweetedPosts = true)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val saltedF = HashtagGraph.userTags(tweets, onlyTagsFromNotRetweetedPosts = true,
-        saltedAgg = true)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(saltedF === plainF)
-  }
-
   test("full graph: union of all edges, heterogeneous string vertex set") {
     assert(graphs.full.edges.count() === 8)
     val v = graphs.full.vertices.collect().map(_.getString(0)).toSet
