@@ -4320,20 +4320,19 @@ object Queries {
           "q_ann_recall_escalate: premise broken — params no longer saturate LSH")
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, 0.05)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(n, 0.999, achievable)
+        // the premise reads the decision the entry point will act on
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.999, 0.05,
+          graft.pipeline.SimilarityLsh.Escalate())
         // the oracle bakes the NON-escalated (capped-LSH) branch and
         // planesFor(500) planes — assert both against the live corpus,
         // with the SCALE-sweep drift hatch (larger synthesized corpora
         // lower the achievable until the IVF honestly wins — by design)
-        require((!plan.escalate && planes ==
+        require((c.family == "lsh" && c.planes ==
             graft.pipeline.SimilarityLsh.planesFor(500,
               graft.pipeline.SimilarityLsh.PairingMaxBucket)) ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
-          s"q_ann_recall_escalate: live sizing (planes=$planes, " +
-            s"escalate=${plan.escalate}) diverges from the oracle's baked " +
+          s"q_ann_recall_escalate: live sizing (planes=${c.planes}, " +
+            s"family=${c.family}) diverges from the oracle's baked " +
             "branch — regenerate the oracle for this SF")
         graft.pipeline.SimilarityLsh.topKAutoRecall(emb,
           k = 3, targetRecall = 0.999, minCosine = 0.05, knownCount = n)
@@ -4370,14 +4369,13 @@ object Queries {
           "q_ann_escalate_wins: premise broken — params no longer saturate LSH")
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, -0.7)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(n, 0.35, achievable)
-        require((plan.escalate && plan.nprobe > 1) ||
+        // the premise reads the decision the entry point will act on
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.35, -0.7,
+          graft.pipeline.SimilarityLsh.Escalate())
+        require((c.family == "ivf" && c.nprobe > 1) ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_ann_escalate_wins: premise broken — the gate no longer " +
-            s"escalates multi-probe at this SF (got $plan)")
+            s"escalates multi-probe at this SF (got $c)")
         graft.pipeline.SimilarityLsh.topKAutoRecall(emb,
           k = 3, targetRecall = 0.35, minCosine = -0.7, knownCount = n)
       },
@@ -4495,16 +4493,15 @@ object Queries {
           "q_dedup_embed_recall_escalate: premise broken — params no longer saturate LSH")
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, 0.05)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(n, 0.999, achievable)
-        require((!plan.escalate && planes ==
+        // the premise reads the decision the entry point will act on
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.999, 0.05,
+          graft.pipeline.SimilarityLsh.Escalate())
+        require((c.family == "lsh" && c.planes ==
             graft.pipeline.SimilarityLsh.planesFor(500,
               graft.pipeline.SimilarityLsh.PairingMaxBucket)) ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
-          s"q_dedup_embed_recall_escalate: live sizing (planes=$planes, " +
-            s"escalate=${plan.escalate}) diverges from the oracle's baked " +
+          s"q_dedup_embed_recall_escalate: live sizing (planes=${c.planes}, " +
+            s"family=${c.family}) diverges from the oracle's baked " +
             "branch — regenerate the oracle for this SF")
         Dedup.embeddingNearDupAutoRecall(emb,
           threshold = 0.05, targetRecall = 0.999, exactLimit = 0L,
@@ -4532,14 +4529,13 @@ object Queries {
           "q_dedup_embed_escalate_wins: premise broken — params no longer saturate LSH")
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, -0.7)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(n, 0.35, achievable)
-        require((plan.escalate && plan.nprobe > 1) ||
+        // the premise reads the decision the entry point will act on
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.35, -0.7,
+          graft.pipeline.SimilarityLsh.Escalate())
+        require((c.family == "ivf" && c.nprobe > 1) ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_dedup_embed_escalate_wins: premise broken — the gate no " +
-            s"longer escalates multi-probe at this SF (got $plan)")
+            s"longer escalates multi-probe at this SF (got $c)")
         Dedup.embeddingNearDupAutoRecall(emb,
           threshold = -0.7, targetRecall = 0.35, exactLimit = 0L,
           knownCount = n)
@@ -4571,14 +4567,13 @@ object Queries {
           "q_ann_escalate_threshold_audit: premise broken — params no longer saturate LSH")
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, -0.7)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(n, 0.35, achievable)
-        require((plan.escalate && plan.nprobe > 1) ||
+        // the premise reads the decision the entry point will act on
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.35, -0.7,
+          graft.pipeline.SimilarityLsh.Escalate())
+        require((c.family == "ivf" && c.nprobe > 1) ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_ann_escalate_threshold_audit: premise broken — the gate no " +
-            s"longer escalates multi-probe at this SF (got $plan)")
+            s"longer escalates multi-probe at this SF (got $c)")
         val pairs = Dedup.embeddingNearDupAutoRecall(emb,
           threshold = -0.7, targetRecall = 0.35, exactLimit = 0L,
           knownCount = n)
@@ -9367,7 +9362,7 @@ object Queries {
     // escalation gate's expected-recall model must stay conservative
     // against (floor model below the clusterless reading; a clustered
     // corpus reads far higher — pass the measured base via
-    // EscalateIvfMeasured to credit it)
+    // Escalate(ivfRecallAtNprobe1) to credit it)
     Q("q_ann_recall_ivf_clustered",
       (s, d) => {
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
@@ -9412,11 +9407,12 @@ object Queries {
     // the MEASURED-base escalation, closing the loop between the
     // monotone gate and the clustered audit: on the clustered corpus
     // the nprobe=1 audit reads ~0.86 (q_ann_recall_ivf_clustered) —
-    // passed via EscalateIvfMeasured, the gate expects min(1, 0.86·√2)
-    // = 1.0 at nprobe=2, which BEATS the 0.9909 LSH achievable, so the
-    // same 0.999@0.05 contract the floor model refuses to escalate
-    // (q_ann_recall_escalate) now escalates honestly. This is exactly
-    // the production sequence: audit once, feed the reading back
+    // passed via Escalate(ivfRecallAtNprobe1), the gate expects
+    // min(1, 0.86·√2) = 1.0 at nprobe=2, which BEATS the 0.9909 LSH
+    // achievable, so the same 0.999@0.05 contract the floor model
+    // refuses to escalate (q_ann_recall_escalate) now escalates
+    // honestly. This is exactly the production sequence: audit once,
+    // feed the reading back
     Q("q_ann_escalate_measured",
       (s, d) => {
         require(graft.pipeline.SimilarityLsh.tablesFor(4, 0.999, 0.05) == 64,
@@ -9424,18 +9420,15 @@ object Queries {
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val cl = clusteredVectors(emb).persistTracked()
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, 0.05)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(
-          n, 0.999, achievable, 0.86)
-        require((plan.escalate && plan.nprobe == 2) ||
+        val policy = graft.pipeline.SimilarityLsh.Escalate(ivfRecallAtNprobe1 = 0.86)
+        // the premise reads the decision the entry point will act on
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.999, 0.05, policy)
+        require((c.family == "ivf" && c.nprobe == 2) ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_ann_escalate_measured: premise broken — the measured gate " +
-            s"no longer escalates at nprobe=2 (got $plan)")
+            s"no longer escalates at nprobe=2 (got $c)")
         graft.pipeline.SimilarityLsh.topKAutoRecall(cl, k = 3,
-          targetRecall = 0.999, minCosine = 0.05,
-          onSaturation = graft.pipeline.SimilarityLsh.EscalateIvfMeasured(0.86),
+          targetRecall = 0.999, minCosine = 0.05, onSaturation = policy,
           knownCount = n)
       },
       Some {
@@ -9450,12 +9443,14 @@ object Queries {
            |WHERE rank <= 3""".stripMargin
       }),
 
-    // the SELF-MEASURING escalation base (r12 verdict task 3):
-    // EscalateIvfSampled derives the measured nprobe=1 reading ITSELF —
-    // md5-hash shard (fraction 0.25, unbiased under any id order),
-    // within-shard IVF audit with the shard's own lowest-id quantizer,
-    // micro-averaged Σcaught/Σtruth (exact-int ratio → the derived
-    // nprobe replays bit-for-bit) — then the same monotone gate. The
+    // the SAMPLED escalation base (r12 verdict task 3): the row measures
+    // the nprobe=1 reading with sampledRecallBase — md5-hash shard
+    // (fraction 0.25, unbiased under any id order), within-shard IVF
+    // audit with the shard's own lowest-id quantizer, micro-averaged
+    // Σcaught/Σtruth (exact-int ratio → the derived nprobe replays
+    // bit-for-bit) — and passes it to the same monotone gate through
+    // Escalate(ivfRecallAtNprobe1 = r1), for its premise check and its
+    // entry point alike; -1 (a thin shard) is the floor model. The
     // oracle replays the ENTIRE derivation in SQL: shard membership,
     // shard audit, the measured-vs-floor branch on the shard-size gate
     // (sf0.001's shard is under the 100-row floor → the floor branch;
@@ -9471,25 +9466,17 @@ object Queries {
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val cl = clusteredVectors(emb).persistTracked()
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, -0.3)
+        // one shard audit, read once: the premise and the entry point
+        // run the same pure gate on the same reading
         val r1 = graft.pipeline.SimilarityLsh.sampledRecallBase(cl, 0.25, 50)
-        val plan = graft.pipeline.SimilarityLsh.escalationPlan(
-          n, 0.999, achievable, r1)
-        require(plan.escalate ||
+        val policy = graft.pipeline.SimilarityLsh.Escalate(ivfRecallAtNprobe1 = r1)
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.999, -0.3, policy)
+        require(c.family == "ivf" ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_ann_escalate_sampled: premise broken — the sampled gate no " +
-            s"longer escalates (r1=$r1, got $plan)")
-        // r13 optimization: the premise assert above already paid for the
-        // shard audit (sampledRecallBase) — pass the reading through
-        // EscalateIvfMeasured instead of having EscalateIvfSampled run
-        // the identical audit a second time (escalationPlan is a pure
-        // function of (n, target, achievable, r1), so the branch and the
-        // result are bit-identical; EscalationSpec pins the equivalence)
+            s"longer escalates (r1=$r1, got $c)")
         graft.pipeline.SimilarityLsh.topKAutoRecall(cl, k = 3,
-          targetRecall = 0.999, minCosine = -0.3,
-          onSaturation = graft.pipeline.SimilarityLsh.EscalateIvfMeasured(r1),
+          targetRecall = 0.999, minCosine = -0.3, onSaturation = policy,
           knownCount = n)
       },
       Some {
@@ -9670,8 +9657,8 @@ object Queries {
     // but the hierarchical index's MEASURED shard reading (~0.95 at
     // fraction 0.25: the md5 shard of a 16-component mixture is itself
     // a 16-component mixture, so the sign-pattern coarse cells keep
-    // their structure) beats both, and EscalateHierSampled returns the
-    // two-level graph. The row pins the gate's THIRD branch end-to-end
+    // their structure) beats both, and Escalate(hierRecall = rh) returns
+    // the two-level graph. The row pins the gate's THIRD branch end-to-end
     // — the first escalation in the catalog that changes index FAMILY,
     // not just a knob. Premise asserted live (with the SCALE-sweep
     // drift hatch); the oracle replays the chosen branch — the full
@@ -9683,23 +9670,19 @@ object Queries {
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val cl = clusteredVectors(emb).persistTracked()
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, -0.3)
+        // one shard audit, read once: the premise and the entry point
+        // run the same pure gate on the same reading
         val rh = graft.pipeline.SimilarityHier.sampledHierRecall(cl, 0.25,
           nAnchors = 50)
-        val choice = graft.pipeline.SimilarityLsh.bestIndexPlan(
-          n, 0.999, achievable, rh)
-        require(choice.family == "hier" ||
+        val policy = graft.pipeline.SimilarityLsh.Escalate(hierRecall = rh)
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.999, -0.3, policy)
+        require(c.family == "hier" ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_ann_escalate_hier_wins: premise broken — the gate no longer " +
-            s"picks the hierarchical index (rh=$rh, got $choice)")
-        // r13 optimization: reuse the premise's shard reading (one
-        // sampledHierRecall, not two) — bestIndexPlan is pure, so
-        // EscalateHierMeasured(rh) picks the identical branch and build
+            s"picks the hierarchical index (rh=$rh, got $c)")
         graft.pipeline.SimilarityLsh.topKAutoRecall(cl, k = 3,
           targetRecall = 0.999, minCosine = -0.3,
-          onSaturation = graft.pipeline.SimilarityLsh.EscalateHierMeasured(rh),
+          onSaturation = policy,
           knownCount = n)
       },
       Some {
@@ -9714,9 +9697,10 @@ object Queries {
       }),
 
     // ...and the PAIR form of the same gate (the dedup entry point
-    // shares bestIndexPlan, so the two can never disagree on the
-    // family): EscalateHierSampled in embeddingNearDupAutoRecall
-    // returns the two-level index's ≥-threshold pairs. The oracle
+    // runs the same saturationGate, so the two can never disagree on
+    // the family): Escalate(hierRecall = rh) in
+    // embeddingNearDupAutoRecall returns the two-level index's
+    // ≥-threshold pairs. The oracle
     // replays the hierarchical pair union (hunion) with the threshold
     // filter — no rank window, so this is also the cheaper shape to
     // hash at every SF
@@ -9727,23 +9711,18 @@ object Queries {
         val emb = t(s, d)("embeddings").select(col("vec_id"), col("embedding"))
         val cl = clusteredVectors(emb).persistTracked()
         val n = emb.count()
-        val planes = graft.pipeline.SimilarityLsh.planesFor(
-          n, graft.pipeline.SimilarityLsh.PairingMaxBucket)
-        val achievable = graft.pipeline.SimilarityLsh.recallAt(planes, 64, -0.3)
+        // one shard audit, read once: the premise and the entry point
+        // run the same pure gate on the same reading
         val rh = graft.pipeline.SimilarityHier.sampledHierRecall(cl, 0.25,
           nAnchors = 50)
-        val choice = graft.pipeline.SimilarityLsh.bestIndexPlan(
-          n, 0.999, achievable, rh)
-        require(choice.family == "hier" ||
+        val policy = graft.pipeline.SimilarityLsh.Escalate(hierRecall = rh)
+        val c = graft.pipeline.SimilarityLsh.saturationGate(n, 0.999, -0.3, policy)
+        require(c.family == "hier" ||
             sys.env.get("SPARK_GRAFT_ALLOW_SF_DRIFT").contains("1"),
           s"q_dedup_embed_escalate_hier: premise broken — the gate no longer " +
-            s"picks the hierarchical index (rh=$rh, got $choice)")
-        // r13 optimization: reuse the premise's shard reading (one
-        // sampledHierRecall, not two) — same pure-gate argument as
-        // q_ann_escalate_hier_wins
+            s"picks the hierarchical index (rh=$rh, got $c)")
         Dedup.embeddingNearDupAutoRecall(cl, threshold = -0.3,
-          targetRecall = 0.999, exactLimit = 0L,
-          onSaturation = graft.pipeline.SimilarityLsh.EscalateHierMeasured(rh),
+          targetRecall = 0.999, exactLimit = 0L, onSaturation = policy,
           knownCount = n)
       },
       Some {

@@ -12,7 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val Array(outDir, suffix, names) = args
+    val (outDir, suffix, names) = args match {
+      case Array(o, s, n) => (o, s, n)
+      case _ => throw new IllegalArgumentException(
+        "usage: PlanDump <outDir> <suffix> <name,name,...>")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -1046,121 +1046,42 @@ object Dedup {
     * `tablesFor(planes, targetRecall, threshold)` (a pair AT the
     * threshold is caught w.p. ≥ targetRecall; higher-cos pairs do
     * better — the S-curve is monotone), and the 64-table SATURATION is
-    * a mechanism here too: [[SimilarityLsh.EscalateIvf]] (default)
-    * switches to the IVF within-cell pair join
-    * ([[SimilarityIvf.nearDupPairs]], √n cells), FailLoud throws naming
-    * the achievable recall, ForceLsh keeps the capped LSH pairs and
-    * logs the shortfall. The exact regime (n ≤ exactLimit) holds the
-    * contract trivially at recall 1.
+    * a mechanism here too. [[SimilarityLsh.saturationGate]] — the same
+    * decision the graph entry point runs, so the two can never disagree
+    * on the family — picks the pair builder: the capped LSH pairs, the
+    * IVF within-cell pair join ([[SimilarityIvf.nearDupPairs]] /
+    * [[SimilarityIvf.nearDupPairsMultiProbe]], √n cells) or the
+    * hierarchical pairs ([[SimilarityHier.nearDupPairsHier]]);
+    * FailLoud throws naming the achievable recall. The exact regime
+    * (n ≤ exactLimit) holds the contract trivially at recall 1.
     */
   def embeddingNearDupAutoRecall(vectors: DataFrame, threshold: Double,
                                  targetRecall: Double = 0.9, dim: Int = 64,
                                  exactLimit: Long = graft.GraftConfig.ExactPairVectors,
                                  onSaturation: SimilarityLsh.SaturationPolicy =
-                                   SimilarityLsh.EscalateIvf,
+                                   SimilarityLsh.Escalate(),
                                  knownCount: Long = -1L): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger("graft.Dedup")
     // exact, not stats-estimated: the regime gate changes the result set
     // (see embeddingNearDupAuto — r12 advice 1)
     val n = SimilarityLsh.exactCorpusCount(vectors, knownCount)
     if (n <= exactLimit) {
-      log.info(s"embeddingNearDupAutoRecall: corpus=$n <= exactLimit=" +
-        s"$exactLimit — exact all-pairs regime (recall 1)")
+      org.slf4j.LoggerFactory.getLogger("graft.Dedup")
+        .info(s"embeddingNearDupAutoRecall: corpus=$n <= exactLimit=" +
+          s"$exactLimit — exact all-pairs regime (recall 1)")
       return embeddingNearDup(vectors, threshold)
     }
-    val planes = SimilarityLsh.planesFor(n, SimilarityLsh.PairingMaxBucket)
-    val tables = SimilarityLsh.tablesFor(planes, targetRecall, threshold)
-    val achievable = SimilarityLsh.recallAt(planes, tables, threshold)
-    val saturated = achievable + 1e-9 < targetRecall
-    def cappedLsh() = SimilarityLsh.candidatePairsAutoCounted(vectors, n,
-        tables, dim, maxBucketSize = SimilarityLsh.PairingMaxBucket)
-      .filter(col("cos") >= threshold)
-    if (!saturated) {
-      log.info(s"embeddingNearDupAutoRecall: corpus=$n planes=$planes " +
-        s"tables=$tables (recall>=$targetRecall at cos>=$threshold)")
-      cappedLsh()
-    } else onSaturation match {
-      // same MONOTONE gate as topKAutoRecall (r12): the IVF pair join —
-      // nprobe auto-sized toward the target — must be EXPECTED to beat
-      // the saturated LSH's achievable recall, else keep the LSH pairs;
-      // both numbers named in the WARN either way
-      case p @ (SimilarityLsh.EscalateIvf |
-                SimilarityLsh.EscalateIvfMeasured(_) |
-                SimilarityLsh.EscalateIvfSampled(_, _)) =>
-        val r1 = p match {
-          case SimilarityLsh.EscalateIvfMeasured(m) => m
-          case SimilarityLsh.EscalateIvfSampled(f, na) =>
-            SimilarityLsh.sampledRecallBase(vectors, f, na)
-          case _ => -1.0
-        }
-        val plan = SimilarityLsh.escalationPlan(n, targetRecall, achievable, r1)
-        if (plan.escalate) {
-          log.warn(f"embeddingNearDupAutoRecall: LSH SATURATED — $tables " +
-            f"tables achieve ~$achievable%.4f < target $targetRecall at " +
-            f"cos>=$threshold with $planes planes; IVF expected " +
-            f"~${plan.expectedIvf}%.4f at nprobe=${plan.nprobe} " +
-            f"(cells=${plan.cells}) beats it — escalating to IVF " +
-            "within-cell pairs. The IVF expectation is THRESHOLD-BLIND " +
-            f"(top-3 kNN fit); at threshold=$threshold%.2f well below 0 " +
-            "delivered recall of cross-cell pairs can fall under the " +
-            "model — audit at the contract's threshold before trusting it")
-          if (plan.nprobe <= 1)
-            SimilarityIvf.nearDupPairs(vectors, threshold, plan.cells)
-          else
-            SimilarityIvf.nearDupPairsMultiProbe(vectors, threshold,
-              plan.cells, plan.nprobe)
-        } else {
-          log.warn(f"embeddingNearDupAutoRecall: LSH SATURATED (achievable " +
-            f"~$achievable%.4f < target $targetRecall at cos>=$threshold) " +
-            f"but IVF expected ~${plan.expectedIvf}%.4f at " +
-            f"nprobe=${plan.nprobe} would deliver LESS — keeping the capped " +
-            f"$tables-table pairs; delivered recall is the achievable figure")
-          cappedLsh()
-        }
-      // the INDEX-FAMILY gate, pair form (r13): measure the hierarchical
-      // index on a deterministic shard, price the flat IVF with the
-      // floor model, take the max-expected-recall family — identical
-      // decision function as topKAutoRecall (bestIndexPlan), so the
-      // graph and pair entry points can never disagree on the family
-      case p @ (SimilarityLsh.EscalateHierSampled(_, _, _, _) |
-                SimilarityLsh.EscalateHierMeasured(_, _, _)) =>
-        val (rh, capMult, np) = p match {
-          case SimilarityLsh.EscalateHierSampled(f, na, cm, np0) =>
-            (SimilarityHier.sampledHierRecall(vectors, f, na,
-              capMult = cm, nprobe = np0), cm, np0)
-          case SimilarityLsh.EscalateHierMeasured(m, cm, np0) => (m, cm, np0)
-          case _ => throw new MatchError(p) // unreachable
-        }
-        val choice = SimilarityLsh.bestIndexPlan(n, targetRecall, achievable, rh)
-        log.warn(f"embeddingNearDupAutoRecall: LSH SATURATED — $tables " +
-          f"tables achieve ~$achievable%.4f < target $targetRecall at " +
-          f"cos>=$threshold; flat IVF floor-expected " +
-          f"~${choice.ivf.expectedIvf}%.4f at nprobe=${choice.ivf.nprobe}; " +
-          f"hierarchical measured ~$rh%.4f on the shard (capMult=$capMult, " +
-          f"nprobe=$np; -1 = shard too thin) — choosing '${choice.family}' " +
-          f"at expected ~${choice.expected}%.4f. Audit at the contract's " +
-          "threshold before trusting the sizing at a new scale")
-        choice.family match {
-          case "hier" => SimilarityHier.nearDupPairsHier(vectors, threshold,
-            dim = dim, capMult = capMult, nprobe = np, knownCount = n)
-          case "ivf" =>
-            if (choice.ivf.nprobe <= 1)
-              SimilarityIvf.nearDupPairs(vectors, threshold, choice.ivf.cells)
-            else SimilarityIvf.nearDupPairsMultiProbe(vectors, threshold,
-              choice.ivf.cells, choice.ivf.nprobe)
-          case _ => cappedLsh()
-        }
-      case SimilarityLsh.FailLoud =>
-        throw new IllegalArgumentException(
-          f"embeddingNearDupAutoRecall: recall target $targetRecall at " +
-            f"cos>=$threshold is unreachable for hyperplane LSH (achievable " +
-            f"at 64 tables: $achievable%.4f). Lower the target, raise the " +
-            "threshold, or use the IVF family")
-      case SimilarityLsh.ForceLsh =>
-        log.warn(f"embeddingNearDupAutoRecall: LSH saturated (achievable " +
-          f"~$achievable%.4f < target $targetRecall) — ForceLsh keeps the " +
-          f"capped $tables-table pairs")
-        cappedLsh()
+    val c = SimilarityLsh.saturationGate(n, targetRecall, threshold, onSaturation)
+    c.family match {
+      case "hier" => SimilarityHier.nearDupPairsHier(vectors, threshold,
+        dim = dim, capMult = SimilarityHier.GateCapMult,
+        nprobe = SimilarityHier.GateNprobe, knownCount = n)
+      case "ivf" if c.nprobe <= 1 =>
+        SimilarityIvf.nearDupPairs(vectors, threshold, c.cells)
+      case "ivf" =>
+        SimilarityIvf.nearDupPairsMultiProbe(vectors, threshold, c.cells, c.nprobe)
+      case _ => SimilarityLsh.candidatePairsAutoCounted(vectors, n, c.tables,
+          dim, maxBucketSize = SimilarityLsh.PairingMaxBucket)
+        .filter(col("cos") >= threshold)
     }
   }
 
@@ -1181,11 +1102,8 @@ object Dedup {
   def pairsRecallAuditAtThreshold(vectors: DataFrame, pairs: DataFrame,
                                   threshold: Double,
                                   nAnchors: Int = 50): DataFrame = {
-    val anchors = vectors
-      .select(col("vec_id"),
-        md5(concat(lit("anch:"), col("vec_id").cast("string"))).as("__m"))
-      .orderBy(col("__m"), col("vec_id")).limit(nAnchors).drop("__m")
-      .persistTracked() // feeds the truth broadcast AND both pair probes
+    // pinned: feeds the truth broadcast AND both pair probes
+    val anchors = SimilarityLsh.auditAnchors(vectors, nAnchors)
     val av = broadcast(anchors.join(vectors, Seq("vec_id"))
       .select(col("vec_id").as("a_id"), col("embedding").as("ae")))
     val truth = vectors.select(col("vec_id").as("o_id"), col("embedding").as("oe"))

@@ -70,8 +70,8 @@ object SimilarityHier {
   /** Near-duplicate pairs `(id1 < id2, cos ≥ threshold)` of the
     * two-level index — the dedup-family twin of [[knnGraphHier]]
     * ([[SimilarityIvf.nearDupPairs]]'s shape), used by
-    * [[graft.pipeline.Dedup.embeddingNearDupAutoRecall]]'s
-    * [[SimilarityLsh.EscalateHierSampled]] branch.
+    * [[graft.pipeline.Dedup.embeddingNearDupAutoRecall]]'s `hier`
+    * branch ([[SimilarityLsh.saturationGate]]).
     */
   def nearDupPairsHier(vectors: DataFrame, threshold: Double,
                        numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
@@ -91,50 +91,38 @@ object SimilarityHier {
     SimilarityLsh.recallAuditCoreCandidates(vectors, k, nAnchors,
       hierPairs(vectors, numPlanes, dim, seed, capMult, nprobe, knownCount))
 
-  /** The [[SimilarityLsh.EscalateHierSampled]] measurement: recall of
-    * the hierarchical kNN graph on a deterministic md5-hash shard
-    * ([[SimilarityLsh.hashShard]] — the same membership gate as the
+  /** The index's knobs on the escalation path: the saturation gate's
+    * `hier` build ([[SimilarityLsh.topKAutoRecall]],
+    * [[graft.pipeline.Dedup.embeddingNearDupAutoRecall]]) and the shard
+    * reading that prices it ([[sampledHierRecall]]) both read these, so
+    * the audit measures the index the gate builds.
+    */
+  val GateCapMult = 1
+  val GateNprobe = 4
+
+  /** The measured reading for [[SimilarityLsh.Escalate]]`(hierRecall)`:
+    * recall of the hierarchical kNN graph on a deterministic md5-hash
+    * shard ([[SimilarityLsh.hashShard]] — the same membership gate as the
     * flat-IVF sampled base, so the two families are audited on the
     * IDENTICAL rows), micro-averaged Σcaught/Σtruth (exact-int ratio,
     * bit-replayable in the SQL oracles). Top-3, the fit the
     * [[SimilarityIvf.expectedRecall]] model family uses, so the reading
     * is comparable to the flat floor model it competes against. The
     * shard's index is fully self-sized on the shard (`cap` from the
-    * shard count — the index has no other knobs to rescale). Returns
-    * −1 (caller degrades to the floor gate) when the shard is under
-    * [[SimilarityLsh.SampledShardFloor]] rows or the truth is empty;
-    * logs the shard size and the reading.
+    * shard count — the index has no other knobs to rescale) at
+    * [[GateCapMult]]/[[GateNprobe]]. Returns −1 (no reading: the gate
+    * never picks hier) when the shard is under
+    * [[SimilarityLsh.SampledShardFloor]] rows or the truth is empty.
     */
   private[graft] def sampledHierRecall(vectors: DataFrame, fraction: Double,
                                        nAnchors: Int, numPlanes: Int = 8,
-                                       dim: Int = 64, seed: Long = 42L,
-                                       capMult: Int = 1,
-                                       nprobe: Int = 4): Double = {
-    val log = org.slf4j.LoggerFactory.getLogger("graft.SimilarityHier")
-    val pinned = SimilarityLsh.hashShard(vectors, fraction).persistTracked()
-    val shardN = pinned.count()
-    if (shardN < SimilarityLsh.SampledShardFloor) {
-      log.warn(s"EscalateHierSampled: shard has $shardN rows " +
-        s"(< ${SimilarityLsh.SampledShardFloor}) at fraction=$fraction — " +
-        "too thin to audit; degrading to the flat-IVF floor gate")
-      return -1.0
+                                       dim: Int = 64,
+                                       seed: Long = 42L): Double =
+    SimilarityLsh.sampledReading(vectors, fraction, "sampledHierRecall") {
+      (pinned, shardN) =>
+        knnGraphHierRecallAudit(pinned, 3, nAnchors, numPlanes, dim, seed,
+          GateCapMult, GateNprobe, knownCount = shardN)
     }
-    val sums = knnGraphHierRecallAudit(pinned, 3, nAnchors, numPlanes, dim,
-        seed, capMult, nprobe, knownCount = shardN)
-      .agg(coalesce(sum(col("n_caught")), lit(0L)).as("c"),
-        coalesce(sum(col("n_truth")), lit(0L)).as("t")).head()
-    val (caught, truth) = (sums.getLong(0), sums.getLong(1))
-    if (truth <= 0L) {
-      log.warn(s"EscalateHierSampled: empty truth on a $shardN-row shard — " +
-        "degrading to the flat-IVF floor gate")
-      return -1.0
-    }
-    val measured = caught.toDouble / truth.toDouble
-    log.info(f"EscalateHierSampled: shard=$shardN rows (fraction=$fraction) " +
-      f"capMult=$capMult nprobe=$nprobe — measured top-3 recall " +
-      f"$measured%.4f ($caught/$truth, micro-averaged)")
-    measured
-  }
 
   /** Candidate pairs `(id1 < id2, cos)` of the two-level index — the
     * exact-pair leg (small coarse cells) unioned with the residual

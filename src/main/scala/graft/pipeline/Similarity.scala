@@ -853,137 +853,63 @@ object SimilarityLsh {
     -math.expm1(numTables * math.log1p(-math.pow(p, numPlanes.toDouble)))
   }
 
-  /** What [[topKAutoRecall]] does when the recall target is UNREACHABLE
-    * for LSH — `tablesFor` clamped at its 64-table cap, so proceeding
-    * silently would deliver less recall than the contract names
-    * (r10 verdict task 1: the saturation signal must be a mechanism,
-    * not a SCALE.md footnote).
+  /** What [[topKAutoRecall]] and
+    * [[graft.pipeline.Dedup.embeddingNearDupAutoRecall]] do when the
+    * recall target is UNREACHABLE for LSH — `tablesFor` clamped at its
+    * 64-table cap, so proceeding silently would deliver less recall than
+    * the contract names (r10 verdict task 1: the saturation signal must
+    * be a mechanism, not a SCALE.md footnote). [[saturationGate]] decides
+    * for both entry points.
     */
-  sealed trait SaturationPolicy
-  /** Escalate to the IVF kNN graph — cells sized by [[cellsFor]],
-    * nprobe auto-sized toward the target ([[SimilarityIvf.nprobeFor]])
-    * — but ONLY when the IVF's expected recall
-    * ([[SimilarityIvf.expectedRecall]], the measured-surface model)
-    * beats what the saturated 64-table LSH still achieves; otherwise
-    * behave as [[ForceLsh]] with the loud shortfall log. The r11
-    * verdict's monotonicity contract: escalation must NEVER deliver
-    * less expected recall than the sizing it abandons (the pre-r12
-    * default traded a measured ~0.99-achievable LSH for an IVF graph
-    * auditing 0.19–0.41 on this corpus). The default model is the
-    * clusterless floor — on a clustered corpus, pass the measured
-    * nprobe=1 audit reading via [[EscalateIvfMeasured]] so the gate
-    * credits the quantizer's real advantage. */
-  case object EscalateIvf extends SaturationPolicy
-  /** [[EscalateIvf]] with the IVF side priced by a MEASURED nprobe=1
-    * recall (one [[SimilarityIvf.knnGraphRecallAudit]] reading on this
-    * corpus or a sampled shard) instead of the clusterless floor model
-    * — the honest gate on clustered corpora, where the floor
-    * under-credits the quantizer. Same monotone rule: escalate only if
-    * the extrapolated IVF expectation beats the LSH achievable. */
-  final case class EscalateIvfMeasured(recallAtNprobe1: Double)
-      extends SaturationPolicy {
-    // -1 = "no usable reading" (a too-thin shard audit): degrade to the
-    // clusterless floor model, exactly as EscalateIvfSampled does — lets
-    // a caller that ran sampledRecallBase itself pass the reading
-    // through unconditionally instead of re-running the audit in-policy
-    require(recallAtNprobe1 == -1.0 ||
-        (recallAtNprobe1 > 0.0 && recallAtNprobe1 <= 1.0),
-      s"recallAtNprobe1=$recallAtNprobe1 is neither a recall in (0, 1] " +
+  sealed trait SaturationPolicy extends Product with Serializable
+  /** Escalate to the index family with the highest expected recall
+    * ([[bestIndexPlan]]): the capped 64-table LSH, the flat IVF (cells
+    * from [[cellsFor]], nprobe sized toward the target by
+    * [[SimilarityIvf.nprobeFor]]) or the two-level hierarchical index
+    * ([[SimilarityHier]]). The r11 verdict's monotonicity contract:
+    * escalation must NEVER deliver less expected recall than the sizing
+    * it abandons (the pre-r12 default traded a measured ~0.99-achievable
+    * LSH for an IVF graph auditing 0.19–0.41 on this corpus).
+    *
+    *   - `ivfRecallAtNprobe1`: a MEASURED nprobe=1 IVF recall (one
+    *     [[SimilarityIvf.knnGraphRecallAudit]] reading on this corpus, or
+    *     [[sampledRecallBase]] on a hash shard) prices the flat IVF
+    *     instead of the clusterless floor model
+    *     ([[SimilarityIvf.expectedRecall]]) — the honest price on a
+    *     clustered corpus, where the floor under-credits the quantizer.
+    *   - `hierRecall`: the hierarchical index's MEASURED recall
+    *     ([[SimilarityHier.sampledHierRecall]]); without it the
+    *     hierarchical index is never a candidate.
+    *
+    * `-1` (the default) is "no usable reading" — what a too-thin shard
+    * audit returns — so a caller passes a shard reading through
+    * unconditionally. `Escalate()` prices the flat IVF by the floor
+    * model alone.
+    */
+  final case class Escalate(ivfRecallAtNprobe1: Double = -1.0,
+                            hierRecall: Double = -1.0) extends SaturationPolicy {
+    require(ivfRecallAtNprobe1 == -1.0 ||
+        (ivfRecallAtNprobe1 > 0.0 && ivfRecallAtNprobe1 <= 1.0),
+      s"ivfRecallAtNprobe1=$ivfRecallAtNprobe1 is neither a recall in (0, 1] " +
         "nor the -1 sentinel")
-  }
-  /** [[EscalateIvfMeasured]] WITHOUT the hand-fed reading (r12 verdict
-    * task 3): the gate derives the measured nprobe=1 base ITSELF by
-    * running the IVF kNN recall audit on a deterministic md5-hash shard
-    * of the corpus (`fraction` of the rows — membership by
-    * `md5('shard:'||vec_id) < threshold`, so the shard is unbiased
-    * under any id ordering, identical in any engine, and immune to
-    * time/source-sorted prefixes). Cost is bounded and logged:
-    * truth nAnchors·(f·n) + one (f·n)^1.5 shard graph — at f=0.25 the
-    * audit is ~12% of the escalated build it gates. The reading is
-    * micro-averaged (Σcaught/Σtruth — a ratio of exact ints, so the
-    * derived nprobe replays bit-for-bit in the SQL oracles); then the
-    * same monotone rule as [[EscalateIvfMeasured]]. If the shard is too
-    * small to audit (< [[SampledShardFloor]] rows), the gate falls back
-    * to the clusterless floor model, loudly. */
-  final case class EscalateIvfSampled(fraction: Double, nAnchors: Int = 50)
-      extends SaturationPolicy {
-    require(fraction > 0.0 && fraction <= 1.0,
-      s"fraction=$fraction out of range (0, 1]")
-    require(nAnchors >= 1, s"nAnchors=$nAnchors out of range")
-  }
-  /** [[EscalateIvfSampled]] extended to the INDEX-FAMILY choice (r13):
-    * on saturation, additionally measure the TWO-LEVEL hierarchical
-    * index ([[SimilarityHier.knnGraphHier]]) on the same deterministic
-    * md5-hash shard and escalate to whichever of {capped LSH, flat IVF
-    * multi-probe, hierarchical} carries the highest expected recall —
-    * the flat IVF priced by the conservative floor model
-    * ([[SimilarityIvf.expectedRecall]]), the hierarchical by its
-    * MEASURED shard reading (micro-averaged Σcaught/Σtruth). This is
-    * the gate that lets a clustered corpus escape the r12 tension
-    * (√n cells fragment clusters; cells=k pays n² pairing): the
-    * sign-pattern coarse level adapts to the cluster count, the shard
-    * audit proves it on THIS corpus before the full build is paid, and
-    * the monotone rule still holds — the chosen path's expected recall
-    * is the max of the three, never below the LSH achievable
-    * ([[bestIndexPlan]], spec-pinned). A shard too thin to audit
-    * (< [[SampledShardFloor]] rows) degrades to the [[EscalateIvf]]
-    * floor gate, loudly. `capMult`/`nprobe` are the hierarchical
-    * index's knobs, audited and built with the same values. */
-  final case class EscalateHierSampled(fraction: Double, nAnchors: Int = 50,
-                                       capMult: Int = 1, nprobe: Int = 4)
-      extends SaturationPolicy {
-    require(fraction > 0.0 && fraction <= 1.0,
-      s"fraction=$fraction out of range (0, 1]")
-    require(nAnchors >= 1, s"nAnchors=$nAnchors out of range")
-    require(capMult >= 1, s"capMult=$capMult out of range")
-    require(nprobe >= 1, s"nprobe=$nprobe out of range")
-  }
-  /** [[EscalateHierSampled]] with the shard reading supplied by a caller
-    * that already paid for it ([[SimilarityHier.sampledHierRecall]] —
-    * e.g. a pre-flight premise assert, or a prior gate on the same
-    * corpus): the family decision ([[bestIndexPlan]]) and the chosen
-    * build are IDENTICAL to [[EscalateHierSampled]] fed the same
-    * reading, but the shard audit — one (f·n)^1.5 index build plus the
-    * nAnchors·(f·n) truth — runs once instead of twice (r13
-    * optimization: the three escalate catalog rows measured the shard
-    * for their premise assert and then the Sampled policy measured it
-    * again; at sf0.1 the duplicated audit was ~40% of each row).
-    * `measured = -1` means "no usable reading" and degrades to the
-    * flat-IVF floor gate, exactly as a too-thin shard does. */
-  final case class EscalateHierMeasured(measured: Double, capMult: Int = 1,
-                                        nprobe: Int = 4)
-      extends SaturationPolicy {
-    require(measured == -1.0 || (measured > 0.0 && measured <= 1.0),
-      s"measured=$measured is neither a recall in (0, 1] nor the -1 sentinel")
-    require(capMult >= 1, s"capMult=$capMult out of range")
-    require(nprobe >= 1, s"nprobe=$nprobe out of range")
+    require(hierRecall == -1.0 || (hierRecall > 0.0 && hierRecall <= 1.0),
+      s"hierRecall=$hierRecall is neither a recall in (0, 1] nor the -1 sentinel")
   }
   /** Throw, naming the achievable recall at 64 tables — for callers
     * whose downstream assumes the LSH plan shape. */
   case object FailLoud extends SaturationPolicy
-  /** Proceed with the capped 64-table LSH graph anyway, logging the
+  /** Proceed with the capped 64-table LSH anyway, logging the
     * achievable recall — the pre-r11 behavior, now opt-in and loud. */
   case object ForceLsh extends SaturationPolicy
 
-  /** Smallest hash-shard the sampled escalation will audit: below this
-    * the per-anchor truth sets are too thin for the reading to mean
-    * anything (50 anchors need neighbors to rank), so
-    * [[EscalateIvfSampled]] falls back to the floor model and says so.
+  /** Smallest hash-shard a sampled escalation base will audit: below
+    * this the per-anchor truth sets are too thin for the reading to
+    * mean anything (50 anchors need neighbors to rank), so
+    * [[sampledRecallBase]] and [[SimilarityHier.sampledHierRecall]]
+    * return no reading (−1) and say so.
     */
   val SampledShardFloor = 100L
 
-  /** The [[EscalateIvfSampled]] measurement: recall of the nprobe=1 IVF
-    * kNN graph on a deterministic md5-hash shard, micro-averaged
-    * (Σcaught/Σtruth — exact-int ratio, bit-replayable). Top-3, the fit
-    * the [[SimilarityIvf.expectedRecall]] model family uses. The shard's
-    * quantizer is its own `cellsFor(shardN)` LOWEST-id members
-    * (explicit, via [[SimilarityIvf.knnGraphRecallAuditWith]]) — the
-    * plain `vec_id < cells` fixed quantizer would find only ~fraction
-    * of those ids inside a hash shard and silently audit a
-    * quarter-sized quantizer. Returns -1 (caller falls back to the
-    * floor model) when the shard is under [[SampledShardFloor]] rows or
-    * the truth is empty; logs the shard size, cells, and the reading.
-    */
   /** Deterministic md5-hash shard — membership by 4-hex-digit md5
     * prefix compare: lowercase hex sorts lexicographically in numeric
     * order, so `md5 < thr` is an exact fraction gate in any engine
@@ -1000,47 +926,68 @@ object SimilarityLsh {
         md5(concat(lit("shard:"), col("vec_id").cast("string"))) < lit(thr))
     }
 
-  private[graft] def sampledRecallBase(vectors: DataFrame, fraction: Double,
-                                       nAnchors: Int): Double = {
+  /** The shard-reading skeleton both sampled escalation bases share: pin
+    * the md5-hash shard (`fraction` of the rows, [[hashShard]]), count
+    * it, run `audit(pinned shard, shard rows)` and micro-average its
+    * `(n_caught, n_truth)` rows — Σcaught/Σtruth, a ratio of exact ints,
+    * so the reading replays bit-for-bit in the SQL oracles. Cost is
+    * bounded: the anchor truth nAnchors·(f·n) plus one shard index
+    * build. Returns −1 (no usable reading) when the shard is under
+    * [[SampledShardFloor]] rows or the truth is empty, and logs why.
+    */
+  private[pipeline] def sampledReading(vectors: DataFrame, fraction: Double,
+                                       label: String)(
+      audit: (DataFrame, Long) => DataFrame): Double = {
     val log = org.slf4j.LoggerFactory.getLogger("graft.SimilarityLsh")
-    val shard = hashShard(vectors, fraction)
-    val pinned = shard.persistTracked()
+    val pinned = hashShard(vectors, fraction).persistTracked()
     val shardN = pinned.count()
     if (shardN < SampledShardFloor) {
-      log.warn(s"EscalateIvfSampled: shard has $shardN rows " +
-        s"(< $SampledShardFloor) at fraction=$fraction — too thin to " +
-        "audit; falling back to the clusterless floor model")
+      log.warn(s"$label: shard has $shardN rows (< $SampledShardFloor) at " +
+        s"fraction=$fraction — too thin to audit; no reading (-1)")
       return -1.0
     }
-    val cells = cellsFor(shardN)
-    // orderBy + limit = TakeOrderedAndProject (per-partition partial
-    // top-k, `cells` rows to the driver-side merge) — NOT a global-sort
-    // window, which would single-task the whole shard
-    val cents = pinned.orderBy(col("vec_id")).limit(cells)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val sums = SimilarityIvf.knnGraphRecallAuditWith(pinned, 3, nAnchors, cents, cells)
+    val sums = audit(pinned, shardN)
       .agg(coalesce(sum(col("n_caught")), lit(0L)).as("c"),
         coalesce(sum(col("n_truth")), lit(0L)).as("t")).head()
     val (caught, truth) = (sums.getLong(0), sums.getLong(1))
     if (truth <= 0L) {
-      log.warn(s"EscalateIvfSampled: empty truth on a $shardN-row shard — " +
-        "falling back to the clusterless floor model")
+      log.warn(s"$label: empty truth on a $shardN-row shard — no reading (-1)")
       return -1.0
     }
     val measured = caught.toDouble / truth.toDouble
-    log.info(f"EscalateIvfSampled: shard=$shardN rows (fraction=$fraction) " +
-      f"cells=$cells — measured nprobe=1 top-3 recall $measured%.4f " +
-      f"($caught/$truth, micro-averaged)")
+    log.info(f"$label: shard=$shardN rows (fraction=$fraction) — measured " +
+      f"top-3 recall $measured%.4f ($caught/$truth, micro-averaged)")
     measured
   }
 
-  /** The monotone escalation decision, pure and spec-pinnable: given a
-    * saturated-LSH achievable recall, size the IVF candidate (cells
-    * from n, nprobe toward the target) and escalate IFF its expected
-    * recall strictly beats the achievable. By construction
-    * `max(achievable, expected-if-escalating)` is what the chosen path
-    * is expected to deliver — escalation can only raise it
-    * (EscalationSpec pins this over a parameter grid).
+  /** The measured nprobe=1 base for [[Escalate]]`(ivfRecallAtNprobe1)`:
+    * recall of the nprobe=1 IVF kNN graph on a deterministic md5-hash
+    * shard ([[sampledReading]]). Top-3, the fit the
+    * [[SimilarityIvf.expectedRecall]] model family uses. The shard's
+    * quantizer is its own `cellsFor(shardN)` LOWEST-id members
+    * (explicit, via [[SimilarityIvf.knnGraphRecallAuditWith]]) — the
+    * plain `vec_id < cells` fixed quantizer would find only ~fraction
+    * of those ids inside a hash shard and silently audit a
+    * quarter-sized quantizer. −1 = no usable reading.
+    */
+  private[graft] def sampledRecallBase(vectors: DataFrame, fraction: Double,
+                                       nAnchors: Int): Double =
+    sampledReading(vectors, fraction, "sampledRecallBase (IVF nprobe=1)") {
+      (pinned, shardN) =>
+        val cells = cellsFor(shardN)
+        // orderBy + limit = TakeOrderedAndProject (per-partition partial
+        // top-k, `cells` rows to the driver-side merge) — NOT a
+        // global-sort window, which would single-task the whole shard
+        val cents = pinned.orderBy(col("vec_id")).limit(cells)
+          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        SimilarityIvf.knnGraphRecallAuditWith(pinned, 3, nAnchors, cents, cells)
+    }
+
+  /** The flat-IVF escalation candidate, pure and spec-pinnable: given a
+    * saturated-LSH achievable recall, size the IVF (cells from n, nprobe
+    * toward the target, priced by the measured nprobe=1 reading or the
+    * floor model when `recallAtNprobe1 = -1`) and escalate IFF its
+    * expected recall strictly beats the achievable.
     */
   private[graft] final case class IvfEscalation(
       escalate: Boolean, cells: Int, nprobe: Int, expectedIvf: Double)
@@ -1053,28 +1000,100 @@ object SimilarityLsh {
     IvfEscalation(expected > achievable + 1e-9, cells, nprobe, expected)
   }
 
-  /** The three-way index-family decision behind [[EscalateHierSampled]],
-    * pure and spec-pinnable: given the saturated-LSH achievable, the
-    * floor-model flat-IVF sizing, and the hierarchical index's MEASURED
-    * shard recall (−1 when the shard was too thin to audit), pick the
-    * family with the highest expected recall. Ties break conservatively
-    * toward the cheaper-to-trust side: hier must STRICTLY beat both
-    * (its reading is a sample), flat IVF must strictly beat the
-    * achievable (the [[escalationPlan]] rule, unchanged). By
-    * construction `expected = max(achievable, expectedIvf?, measuredHier?)`
-    * — the monotone contract extends to three families
-    * (EscalationSpec pins it over a grid).
+  /** The saturation gate's decision: the LSH sizing it priced (`planes`,
+    * `tables`, `achievable`, `saturated`), the chosen `family` (`lsh`,
+    * `ivf` or `hier`) with its `expected` recall, and the flat-IVF
+    * candidate `ivf` (cells, nprobe, expected) — priced even when it
+    * loses, so the log and the catalog premise checks can name it.
+    * [[bestIndexPlan]] leaves the LSH sizing fields at their defaults;
+    * [[saturationGate]] fills them.
     */
   private[graft] final case class IndexChoice(
-      family: String, expected: Double, ivf: IvfEscalation)
+      family: String, expected: Double, ivf: IvfEscalation,
+      achievable: Double, planes: Int = 0, tables: Int = 0,
+      saturated: Boolean = true) {
+    def cells: Int = ivf.cells
+    def nprobe: Int = ivf.nprobe
+  }
+
+  /** The index-family decision, pure and spec-pinnable: given the
+    * saturated-LSH achievable, the flat IVF (its measured nprobe=1
+    * reading, or the floor model at −1 — [[escalationPlan]]) and the
+    * hierarchical index's MEASURED recall (−1 = no reading, never
+    * chosen), pick the family with the highest expected recall. Ties
+    * break conservatively toward the cheaper-to-trust side: hier must
+    * STRICTLY beat both (its reading is a sample), flat IVF must
+    * strictly beat the achievable. By construction
+    * `expected = max(achievable, expectedIvf, hierRecall)` — the
+    * monotone contract over three families (EscalationSpec pins it over
+    * a grid).
+    */
   private[graft] def bestIndexPlan(n: Long, targetRecall: Double,
                                    achievable: Double,
-                                   measuredHier: Double): IndexChoice = {
-    val ivf = escalationPlan(n, targetRecall, achievable)
-    if (measuredHier > math.max(achievable, ivf.expectedIvf) + 1e-9)
-      IndexChoice("hier", measuredHier, ivf)
-    else if (ivf.escalate) IndexChoice("ivf", ivf.expectedIvf, ivf)
-    else IndexChoice("lsh", achievable, ivf)
+                                   ivfRecallAtNprobe1: Double,
+                                   hierRecall: Double): IndexChoice = {
+    val ivf = escalationPlan(n, targetRecall, achievable, ivfRecallAtNprobe1)
+    if (hierRecall > math.max(achievable, ivf.expectedIvf) + 1e-9)
+      IndexChoice("hier", hierRecall, ivf, achievable)
+    else if (ivf.escalate) IndexChoice("ivf", ivf.expectedIvf, ivf, achievable)
+    else IndexChoice("lsh", achievable, ivf, achievable)
+  }
+
+  /** THE saturation gate — the one decision behind [[topKAutoRecall]],
+    * [[graft.pipeline.Dedup.embeddingNearDupAutoRecall]] and the catalog
+    * rows' premise checks. Pure (no Spark job): LSH planes from the
+    * corpus count ([[planesFor]] under [[PairingMaxBucket]]), tables from
+    * the recall target ([[tablesFor]]), the achievable recall at that
+    * sizing ([[recallAt]]). Unsaturated, the family is `lsh`. Saturated
+    * (only the 64-table cap leaves a gap — `tablesFor` rounds UP), the
+    * policy decides: [[Escalate]] takes [[bestIndexPlan]]'s family,
+    * [[ForceLsh]] keeps the capped LSH, [[FailLoud]] throws naming the
+    * achievable recall. One log line per decision, built from the
+    * record; a saturated one is a WARN naming both recalls, so no path
+    * trades recall down silently.
+    */
+  private[graft] def saturationGate(n: Long, targetRecall: Double,
+                                    minCosine: Double,
+                                    policy: SaturationPolicy): IndexChoice = {
+    val log = org.slf4j.LoggerFactory.getLogger("graft.SimilarityLsh")
+    val planes = planesFor(n, PairingMaxBucket)
+    val tables = tablesFor(planes, targetRecall, minCosine)
+    val achievable = recallAt(planes, tables, minCosine)
+    val saturated = achievable + 1e-9 < targetRecall
+    val (r1, rh) = policy match {
+      case Escalate(r1, rh) => (r1, rh)
+      case _ => (-1.0, -1.0)
+    }
+    val best = bestIndexPlan(n, targetRecall, achievable, r1, rh)
+    val lsh = best.copy(family = "lsh", expected = achievable)
+    val c = (policy match {
+      case _ if !saturated => lsh
+      case _: Escalate => best
+      case ForceLsh => lsh
+      case FailLoud =>
+        throw new IllegalArgumentException(
+          f"saturationGate: recall target $targetRecall at cos>=$minCosine " +
+            f"is unreachable for hyperplane LSH — $planes planes need more " +
+            f"than the 64-table cap (achievable at 64: $achievable%.4f). " +
+            "Lower the target, relax the cosine floor, or Escalate")
+    }).copy(planes = planes, tables = tables, saturated = saturated)
+    if (!saturated)
+      log.info(s"saturationGate: corpus=$n planes=$planes tables=$tables " +
+        s"(recall>=$targetRecall at cos>=$minCosine) — lsh")
+    else
+      log.warn(f"saturationGate: LSH SATURATED — $tables tables (the cap) " +
+        f"of $planes planes achieve ~$achievable%.4f < target " +
+        f"$targetRecall at cos>=$minCosine; flat IVF expected " +
+        f"~${c.ivf.expectedIvf}%.4f at nprobe=${c.nprobe} (cells=${c.cells}, " +
+        f"nprobe=1 reading $r1), hierarchical reading $rh (-1 = none) — " +
+        f"${policy.productPrefix} chooses '${c.family}' at expected " +
+        f"~${c.expected}%.4f" +
+        (if (c.family == "lsh")
+          "; the delivered recall is the achievable figure, not the target"
+        else "; the expectation is THRESHOLD-BLIND (a top-3 kNN fit) — at " +
+          "a cosine floor well below 0 delivered recall can fall under it; " +
+          "audit at the contract's cosine before trusting the sizing"))
+    c
   }
 
   /** Corpus row count for the self-sizing entry points WITHOUT forcing
@@ -1291,112 +1310,29 @@ object SimilarityLsh {
     * SATURATION is a mechanism, not a footnote (r10 verdict task 1):
     * when [[tablesFor]] clamps at its 64-table cap the target is
     * unreachable for hyperplane LSH — [[recallAt]] prices exactly what
-    * 64 tables deliver — and `onSaturation` decides what happens:
-    * [[EscalateIvf]] (default) switches to the IVF kNN graph with
-    * cells sized by [[cellsFor]], [[FailLoud]] throws naming the
-    * achievable recall, [[ForceLsh]] keeps the capped LSH graph and
-    * logs the shortfall. No path under-delivers silently.
+    * 64 tables deliver — and [[saturationGate]] decides under
+    * `onSaturation`: [[Escalate]] (default) builds the family with the
+    * highest expected recall — the capped LSH graph, the IVF kNN graph
+    * ([[SimilarityIvf.knnGraph]] / [[SimilarityIvf.knnGraphMultiProbe]])
+    * or the hierarchical one ([[SimilarityHier.knnGraphHier]]) —
+    * [[FailLoud]] throws naming the achievable recall, [[ForceLsh]]
+    * keeps the capped LSH graph and logs the shortfall. No path
+    * under-delivers silently.
     */
   def topKAutoRecall(vectors: DataFrame, k: Int, targetRecall: Double = 0.9,
                      minCosine: Double = 0.5, dim: Int = 64,
-                     onSaturation: SaturationPolicy = EscalateIvf,
+                     onSaturation: SaturationPolicy = Escalate(),
                      knownCount: Long = -1L): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger("graft.SimilarityLsh")
     val n = corpusCount(vectors, knownCount)
-    val planes = planesFor(n, PairingMaxBucket)
-    val tables = tablesFor(planes, targetRecall, minCosine)
-    val achievable = recallAt(planes, tables, minCosine)
-    // strict-with-slack: tablesFor rounds UP, so an unclamped sizing
-    // always meets the target; only the 64-cap can leave a gap
-    val saturated = achievable + 1e-9 < targetRecall
-    def cappedLsh() = rankTopK(candidatePairsAutoCounted(vectors, n, tables,
-      dim, maxBucketSize = PairingMaxBucket), k)
-    if (!saturated) {
-      log.info(s"topKAutoRecall: corpus=$n planes=$planes tables=$tables " +
-        s"(targetRecall=$targetRecall at cos>=$minCosine)")
-      cappedLsh()
-    } else onSaturation match {
-      // the MONOTONE escalation gate (r12): escalate only when the IVF
-      // candidate — nprobe auto-sized toward the target — is EXPECTED
-      // to beat what the saturated 64-table LSH still achieves;
-      // otherwise keep the LSH (ForceLsh behavior) and say so. The WARN
-      // names both numbers either way, so no path trades recall down
-      // silently (the r11 finding: the old default swapped ~0.99
-      // achievable for a 0.19–0.41-auditing IVF graph).
-      case p @ (EscalateIvf | EscalateIvfMeasured(_) | EscalateIvfSampled(_, _)) =>
-        val r1 = p match {
-          case EscalateIvfMeasured(m) => m
-          case EscalateIvfSampled(f, na) => sampledRecallBase(vectors, f, na)
-          case _ => -1.0
-        }
-        val plan = escalationPlan(n, targetRecall, achievable, r1)
-        if (plan.escalate) {
-          log.warn(f"topKAutoRecall: LSH SATURATED — $tables tables (the " +
-            f"cap) achieve recall ~$achievable%.4f < target $targetRecall " +
-            f"at cos>=$minCosine with $planes planes; IVF expected " +
-            f"~${plan.expectedIvf}%.4f at nprobe=${plan.nprobe} " +
-            f"(cells=${plan.cells}) beats it — escalating. Verify with " +
-            "knnGraphRecallAudit before trusting the sizing; the IVF " +
-            "expectation is THRESHOLD-BLIND (top-3 kNN fit) — at " +
-            f"minCosine=$minCosine%.2f well below 0, delivered recall of " +
-            "cross-cell antipodal pairs can fall under the model")
-          if (plan.nprobe <= 1) SimilarityIvf.knnGraph(vectors, k, plan.cells)
-          else SimilarityIvf.knnGraphMultiProbe(vectors, k, plan.cells, plan.nprobe)
-        } else {
-          log.warn(f"topKAutoRecall: LSH SATURATED (achievable " +
-            f"~$achievable%.4f < target $targetRecall at cos>=$minCosine) " +
-            f"but IVF expected ~${plan.expectedIvf}%.4f at " +
-            f"nprobe=${plan.nprobe} would deliver LESS — keeping the capped " +
-            f"$tables-table LSH graph; delivered recall is the achievable " +
-            "figure, not the target")
-          cappedLsh()
-        }
-      // the INDEX-FAMILY gate (r13): measure the hierarchical index on
-      // a deterministic shard, price the flat IVF with the conservative
-      // floor model, and take the max-expected-recall family — the
-      // monotone contract extended from two families to three. The
-      // shard audit is the only added cost (bounded: ~(f·n)^1.5 + the
-      // anchor truth), paid BEFORE committing to a full index build.
-      case p @ (EscalateHierSampled(_, _, _, _) |
-                EscalateHierMeasured(_, _, _)) =>
-        val (rh, capMult, np) = p match {
-          case EscalateHierSampled(f, na, cm, np0) =>
-            (SimilarityHier.sampledHierRecall(vectors, f, na,
-              capMult = cm, nprobe = np0), cm, np0)
-          case EscalateHierMeasured(m, cm, np0) => (m, cm, np0)
-          case _ => throw new MatchError(p) // unreachable
-        }
-        val choice = bestIndexPlan(n, targetRecall, achievable, rh)
-        log.warn(f"topKAutoRecall: LSH SATURATED — $tables tables (the cap) " +
-          f"achieve ~$achievable%.4f < target $targetRecall at " +
-          f"cos>=$minCosine; flat IVF floor-expected " +
-          f"~${choice.ivf.expectedIvf}%.4f at nprobe=${choice.ivf.nprobe} " +
-          f"(cells=${choice.ivf.cells}); hierarchical measured " +
-          f"~$rh%.4f on the shard (capMult=$capMult, nprobe=$np; -1 = " +
-          f"shard too thin) — choosing '${choice.family}' at expected " +
-          f"~${choice.expected}%.4f. Verify with the matching recall " +
-          "audit before trusting the sizing at a new scale")
-        choice.family match {
-          case "hier" => SimilarityHier.knnGraphHier(vectors, k, dim = dim,
-            capMult = capMult, nprobe = np, knownCount = n)
-          case "ivf" =>
-            if (choice.ivf.nprobe <= 1)
-              SimilarityIvf.knnGraph(vectors, k, choice.ivf.cells)
-            else SimilarityIvf.knnGraphMultiProbe(vectors, k,
-              choice.ivf.cells, choice.ivf.nprobe)
-          case _ => cappedLsh()
-        }
-      case FailLoud =>
-        throw new IllegalArgumentException(
-          f"topKAutoRecall: recall target $targetRecall at cos>=$minCosine " +
-            f"is unreachable for hyperplane LSH — $planes planes need more " +
-            f"than the 64-table cap (achievable at 64: $achievable%.4f). " +
-            "Lower the target, relax minCosine, or use the IVF family")
-      case ForceLsh =>
-        log.warn(f"topKAutoRecall: LSH saturated (achievable ~$achievable%.4f " +
-          f"< target $targetRecall) — ForceLsh keeps the capped $tables-table " +
-          "graph; the delivered recall is the achievable figure, not the target")
-        cappedLsh()
+    val c = saturationGate(n, targetRecall, minCosine, onSaturation)
+    c.family match {
+      case "hier" => SimilarityHier.knnGraphHier(vectors, k, dim = dim,
+        capMult = SimilarityHier.GateCapMult,
+        nprobe = SimilarityHier.GateNprobe, knownCount = n)
+      case "ivf" if c.nprobe <= 1 => SimilarityIvf.knnGraph(vectors, k, c.cells)
+      case "ivf" => SimilarityIvf.knnGraphMultiProbe(vectors, k, c.cells, c.nprobe)
+      case _ => rankTopK(candidatePairsAutoCounted(vectors, n, c.tables, dim,
+        maxBucketSize = PairingMaxBucket), k)
     }
   }
 

@@ -275,4 +275,11 @@ class CatalogSweepSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException](Verify.main(Array("x")))
     assert(e.getMessage === "usage: Verify <sfDir> <outDir> [name,name,...]")
   }
+
+  test("PlanDump.main rejects a wrong argument count with its usage line") {
+    for (args <- Seq(Array("x"), Array("a", "b", "c", "d"))) {
+      val e = intercept[IllegalArgumentException](graft.cli.PlanDump.main(args))
+      assert(e.getMessage === "usage: PlanDump <outDir> <suffix> <name,name,...>")
+    }
+  }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-12 specs: the MONOTONE saturation escalation (r11 verdict
   * task 1 — escalation must never deliver less expected recall than
-  * the sizing it abandons), the nprobe sizing contract completing the
+  * the sizing it abandons) and the one `saturationGate` both auto-recall
+  * entry points run, the nprobe sizing contract completing the
   * planesFor/tablesFor/hashesFor family (task 3), and the two r11
   * advice regressions (j=1 recall, predicted-mode rows_per_band
   * naming).
@@ -74,7 +75,7 @@ class EscalationSpec extends SparkTestBase {
     }
   }
 
-  test("EscalateIvfSampled: sampledRecallBase = micro-averaged audit; thin shards fall back loudly; deterministic") {
+  test("sampledRecallBase = micro-averaged audit; thin shards fall back loudly; deterministic") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     // fraction=1.0: shard = whole corpus, shard centroids = lowest-16
@@ -93,10 +94,6 @@ class EscalationSpec extends SparkTestBase {
     // a shard under SampledShardFloor rows refuses to pretend: -1 sends
     // the gate to the clusterless floor model
     assert(SimilarityLsh.sampledRecallBase(emb, 0.05, 50) === -1.0)
-    // the policy validates its fraction
-    intercept[IllegalArgumentException] {
-      SimilarityLsh.EscalateIvfSampled(0.0)
-    }
     graft.GraftStorage.clear(spark)
   }
 
@@ -105,7 +102,7 @@ class EscalationSpec extends SparkTestBase {
          t <- Seq(0.35, 0.9, 0.999);
          achievable <- Seq(0.05, 0.23, 0.5, 0.82, 0.99);
          rh <- Seq(-1.0, 0.1, 0.45, 0.9)) {
-      val c = SimilarityLsh.bestIndexPlan(n, t, achievable, rh)
+      val c = SimilarityLsh.bestIndexPlan(n, t, achievable, -1.0, rh)
       // never below the LSH achievable (the r11 contract), and never
       // below what EITHER escalation candidate honestly promises
       assert(c.expected >= achievable - 1e-12,
@@ -122,17 +119,131 @@ class EscalationSpec extends SparkTestBase {
       assert(c.ivf === SimilarityLsh.escalationPlan(n, t, achievable))
     }
     // a thin-shard fallback (rh = -1) can never pick hier
-    assert(SimilarityLsh.bestIndexPlan(2000L, 0.999, 0.05, -1.0).family !== "hier")
-    // the policy validates its knobs
-    intercept[IllegalArgumentException] {
-      SimilarityLsh.EscalateHierSampled(1.5)
-    }
-    intercept[IllegalArgumentException] {
-      SimilarityLsh.EscalateHierSampled(0.25, capMult = 0)
-    }
+    assert(SimilarityLsh.bestIndexPlan(2000L, 0.999, 0.05, -1.0, -1.0).family !== "hier")
   }
 
-  test("EscalateHierSampled: sampledHierRecall = micro-averaged hier audit at fraction 1; thin shards degrade; gate returns the hier plan when it wins") {
+  test("saturationGate grid: escalationPlan's choice without a hier reading, the hier rule without an IVF reading, the max family with both") {
+    import SimilarityLsh.{Escalate, FailLoud, ForceLsh}
+    val ns = Seq(500L, 2000L, 20000L, 1000000L)
+    val ts = Seq(0.35, 0.5, 0.9, 0.999)
+    val r1s = Seq(-1.0, 0.3, 0.95)
+    val rhs = Seq(-1.0, 0.1, 0.45, 0.9)
+    // the hierarchical rule priced against the FLOOR-model IVF: hier
+    // only on a strict win over both other families
+    def hierRule(n: Long, t: Double, a: Double, rh: Double): (String, Double) = {
+      val ivf = SimilarityLsh.escalationPlan(n, t, a)
+      if (rh > math.max(a, ivf.expectedIvf) + 1e-9) ("hier", rh)
+      else if (ivf.escalate) ("ivf", ivf.expectedIvf)
+      else ("lsh", a)
+    }
+    var ties = 0
+    for (n <- ns; t <- ts; r1 <- r1s) {
+      val e = SimilarityLsh.escalationPlan(n, t, 0.0, r1).expectedIvf
+      // ties break toward LSH: an exact tie, and one that sits exactly
+      // at the 1e-9 slack, both keep the LSH (and never pick hier)
+      val slackTie = e - 1e-9
+      val tieAs = Seq(e) ++ (if (slackTie + 1e-9 == e) Seq(slackTie) else Nil)
+      ties += tieAs.size - 1
+      for (a <- Seq(0.05, 0.23, 0.5, 0.73, 0.82, 0.99) ++ tieAs; rh <- rhs) {
+        val ivf = SimilarityLsh.escalationPlan(n, t, a, r1)
+        val c = SimilarityLsh.bestIndexPlan(n, t, a, r1, rh)
+        val at = s"n=$n t=$t a=$a r1=$r1 rh=$rh: $c"
+        assert(c.cells === ivf.cells && c.nprobe === ivf.nprobe, at)
+        assert(c.ivf === ivf, at)
+        if (rh == -1.0) {
+          assert(c.family === (if (ivf.escalate) "ivf" else "lsh"), at)
+          assert(c.expected === (if (ivf.escalate) ivf.expectedIvf else a), at)
+        }
+        if (r1 == -1.0) assert((c.family, c.expected) === hierRule(n, t, a, rh), at)
+        // both readings: the max-expected family, never below the LSH
+        assert(c.expected >= a, at)
+        assert(math.abs(c.expected - Seq(a, ivf.expectedIvf, rh).max) <= 2e-9, at)
+        if (tieAs.contains(a)) assert(c.family !== "ivf", s"tie escalated — $at")
+      }
+      // a hier reading that only ties the best other family at the
+      // slack is not a win
+      assert(SimilarityLsh.bestIndexPlan(n, t, 0.5, r1,
+          math.max(0.5, e) + 1e-9).family !== "hier",
+        s"n=$n t=$t r1=$r1: a slack-tied hier reading won")
+    }
+    assert(ties > 0, "grid premise: no slack tie was representable")
+
+    // the gate prices the LSH sizing itself and delegates the family to
+    // bestIndexPlan when saturated under Escalate
+    for (n <- Seq(500L, 20000L, 1000000L); t <- Seq(0.35, 0.9, 0.999);
+         minCos <- Seq(-0.7, 0.05, 0.5); r1 <- Seq(-1.0, 0.95); rh <- Seq(-1.0, 0.9)) {
+      val planes = SimilarityLsh.planesFor(n, SimilarityLsh.PairingMaxBucket)
+      val tables = SimilarityLsh.tablesFor(planes, t, minCos)
+      val a = SimilarityLsh.recallAt(planes, tables, minCos)
+      val saturated = a + 1e-9 < t
+      val g = SimilarityLsh.saturationGate(n, t, minCos, Escalate(r1, rh))
+      val at = s"n=$n t=$t cos=$minCos r1=$r1 rh=$rh: $g"
+      assert(g.planes === planes && g.tables === tables && g.achievable === a &&
+        g.saturated === saturated, at)
+      val best = SimilarityLsh.bestIndexPlan(n, t, a, r1, rh)
+      if (saturated) {
+        assert((g.family, g.expected, g.ivf) === ((best.family, best.expected, best.ivf)), at)
+        assert(SimilarityLsh.saturationGate(n, t, minCos, ForceLsh).family === "lsh", at)
+        val ex = intercept[IllegalArgumentException] {
+          SimilarityLsh.saturationGate(n, t, minCos, FailLoud)
+        }
+        assert(ex.getMessage.contains("unreachable") &&
+          ex.getMessage.contains("achievable"), at)
+      } else {
+        assert(g.family === "lsh" && g.expected === a, at)
+        assert(SimilarityLsh.saturationGate(n, t, minCos, FailLoud).family === "lsh", at)
+      }
+    }
+    // an achievable that meets the target within the 1e-9 slack is not
+    // saturated, even at the 64-table cap
+    val capped = SimilarityLsh.recallAt(4, 64, 0.05)
+    val atSlack = SimilarityLsh.saturationGate(500L, capped + 1e-9, 0.05, FailLoud)
+    assert(atSlack.tables === 64 && !atSlack.saturated && atSlack.family === "lsh",
+      s"a target at the slack saturated: $atSlack")
+  }
+
+  test("saturationGate: the graph and pair entry points build the family the same decision picks") {
+    import graft.pipeline.SimilarityHier
+    import SimilarityLsh.Escalate
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val n = emb.count()
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
+      a.except(b).isEmpty && b.except(a).isEmpty
+    // 0.999 at cos 0.05 saturates the cap with ~0.99 achievable: the
+    // floor model keeps the LSH, a measured 0.95 base escalates to
+    // multi-probe IVF, a perfect hier reading wins outright
+    val families = Seq(Escalate(), Escalate(ivfRecallAtNprobe1 = 0.95),
+        Escalate(hierRecall = 1.0)).map { policy =>
+      val c = SimilarityLsh.saturationGate(n, 0.999, 0.05, policy)
+      val (graph, pairs) = c.family match {
+        case "hier" =>
+          (SimilarityHier.knnGraphHier(emb, 3, capMult = 1, nprobe = 4, knownCount = n),
+            SimilarityHier.nearDupPairsHier(emb, 0.05, capMult = 1, nprobe = 4,
+              knownCount = n))
+        case "ivf" =>
+          assert(c.nprobe > 1, s"premise: $policy must size a multi-probe IVF, got $c")
+          (SimilarityIvf.knnGraphMultiProbe(emb, 3, c.cells, c.nprobe),
+            SimilarityIvf.nearDupPairsMultiProbe(emb, 0.05, c.cells, c.nprobe))
+        case _ =>
+          (SimilarityLsh.topKAuto(emb, 3, numTables = c.tables),
+            SimilarityLsh.candidatePairsAuto(emb, numTables = c.tables,
+              maxBucketSize = SimilarityLsh.PairingMaxBucket)
+              .filter(col("cos") >= 0.05))
+      }
+      assert(same(SimilarityLsh.topKAutoRecall(emb, k = 3, targetRecall = 0.999,
+        minCosine = 0.05, onSaturation = policy, knownCount = n), graph),
+        s"$policy: the graph entry point did not build the '${c.family}' graph")
+      assert(same(Dedup.embeddingNearDupAutoRecall(emb, 0.05, targetRecall = 0.999,
+        exactLimit = 0L, onSaturation = policy, knownCount = n), pairs),
+        s"$policy: the pair entry point did not build the '${c.family}' pairs")
+      c.family
+    }
+    assert(families === Seq("lsh", "ivf", "hier"))
+    GraftStorage.clear(spark)
+  }
+
+  test("sampledHierRecall = micro-averaged hier audit at fraction 1; thin shards degrade; gate returns the hier plan when it wins") {
     import graft.pipeline.SimilarityHier
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -157,33 +268,24 @@ class EscalationSpec extends SparkTestBase {
     val n = cl.count()
     val planes = SimilarityLsh.planesFor(n, SimilarityLsh.PairingMaxBucket)
     val achievable = SimilarityLsh.recallAt(planes, 64, -0.3)
-    val choice = SimilarityLsh.bestIndexPlan(n, 0.999, achievable, rh)
+    val choice = SimilarityLsh.bestIndexPlan(n, 0.999, achievable, -1.0, rh)
     assert(choice.family === "hier",
       s"premise: hier must win at this sizing (a=$achievable rh=$rh), got $choice")
     val gated = SimilarityLsh.topKAutoRecall(cl, k = 3, targetRecall = 0.999,
-      minCosine = -0.3, onSaturation = SimilarityLsh.EscalateHierSampled(1.0),
+      minCosine = -0.3, onSaturation = SimilarityLsh.Escalate(hierRecall = rh),
       knownCount = n)
     val direct = SimilarityHier.knnGraphHier(cl, 3, capMult = 1, nprobe = 4,
       knownCount = n)
     assert(gated.except(direct).isEmpty && direct.except(gated).isEmpty,
       "the gate's hier branch must return exactly the hierarchical graph")
-    // r13 optimization equivalence: a caller that already paid for the
-    // shard reading passes it via EscalateHierMeasured — bestIndexPlan is
-    // pure, so the Measured gate must return the IDENTICAL plan as the
-    // Sampled gate fed the same corpus (one shard audit instead of two)
-    val measuredGate = SimilarityLsh.topKAutoRecall(cl, k = 3,
-      targetRecall = 0.999, minCosine = -0.3,
-      onSaturation = SimilarityLsh.EscalateHierMeasured(rh), knownCount = n)
-    assert(measuredGate.except(gated).isEmpty && gated.except(measuredGate).isEmpty,
-      "EscalateHierMeasured(rh) must equal EscalateHierSampled at the same reading")
     // the -1 sentinel degrades to the floor gate (never hier), same as a
     // thin shard; and the policy rejects junk readings
-    assert(SimilarityLsh.bestIndexPlan(n, 0.999, achievable, -1.0).family !== "hier")
+    assert(SimilarityLsh.bestIndexPlan(n, 0.999, achievable, -1.0, -1.0).family !== "hier")
     intercept[IllegalArgumentException] {
-      SimilarityLsh.EscalateHierMeasured(1.5)
+      SimilarityLsh.Escalate(hierRecall = 1.5)
     }
     intercept[IllegalArgumentException] {
-      SimilarityLsh.EscalateIvfMeasured(0.0)
+      SimilarityLsh.Escalate(ivfRecallAtNprobe1 = 0.0)
     }
     GraftStorage.clear(spark)
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Round-11 specs: the mechanical LSH recall-saturation escalation —
   * `recallAt` (the forward S-curve `tablesFor` inverts), `cellsFor`
   * (IVF sizing under the same occupancy target), and the three
-  * `SaturationPolicy` behaviors of `topKAutoRecall` (r10 verdict
+  * `SaturationPolicy` cases (`Escalate`, `FailLoud`, `ForceLsh`) of
+  * `topKAutoRecall` and `embeddingNearDupAutoRecall` (r10 verdict
   * task 1: when the 64-table cap engages, nothing may under-deliver
   * the recall contract silently).
   */
@@ -61,10 +62,10 @@ class Features5Spec extends SparkTestBase {
     assert(!plan.escalate && plan.expectedIvf < achievable,
       "test premise: the IVF floor model must lose to the capped LSH here")
     val esc = SimilarityLsh.topKAutoRecall(emb, k = 3,
-      targetRecall = 0.999, minCosine = 0.05) // default EscalateIvf
+      targetRecall = 0.999, minCosine = 0.05) // default Escalate()
     val capped64 = SimilarityLsh.topKAuto(emb, k = 3, numTables = 64)
     assert(same(esc, capped64),
-      "default EscalateIvf must keep the capped LSH graph when IVF is expected to deliver less")
+      "default Escalate() must keep the capped LSH graph when IVF is expected to deliver less")
 
     // a MEASURED IVF base recall that beats the achievable escalates —
     // multi-probe sized toward the target by nprobeFor
@@ -72,10 +73,10 @@ class Features5Spec extends SparkTestBase {
     assert(mPlan.escalate && mPlan.nprobe === 2,
       s"test premise: measured 0.95 base must escalate at nprobe=2, got $mPlan")
     val escM = SimilarityLsh.topKAutoRecall(emb, k = 3, targetRecall = 0.999,
-      minCosine = 0.05, onSaturation = SimilarityLsh.EscalateIvfMeasured(0.95))
+      minCosine = 0.05, onSaturation = SimilarityLsh.Escalate(ivfRecallAtNprobe1 = 0.95))
     val ivf = SimilarityIvf.knnGraphMultiProbe(emb, 3, mPlan.cells, mPlan.nprobe)
     assert(same(escM, ivf),
-      "EscalateIvfMeasured result diverges from the sized multi-probe IVF graph")
+      "Escalate(ivfRecallAtNprobe1) result diverges from the sized multi-probe IVF graph")
 
     val ex = intercept[IllegalArgumentException] {
       SimilarityLsh.topKAutoRecall(emb, k = 3, targetRecall = 0.999,
@@ -242,7 +243,7 @@ class Features5Spec extends SparkTestBase {
     // multi-probe within-cell pair join, nprobe sized toward the target
     assert(same(
       Dedup.embeddingNearDupAutoRecall(emb, 0.05, targetRecall = 0.999,
-        exactLimit = 0L, onSaturation = SimilarityLsh.EscalateIvfMeasured(0.95)),
+        exactLimit = 0L, onSaturation = SimilarityLsh.Escalate(ivfRecallAtNprobe1 = 0.95)),
       SimilarityIvf.nearDupPairsMultiProbe(emb, 0.05,
         SimilarityLsh.cellsFor(n), nprobe = 2)))
     // ...or throws, naming the shortfall
