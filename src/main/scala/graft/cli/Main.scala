@@ -95,7 +95,9 @@ object Main {
   def run(spark: SparkSession, args: Args): Unit = GraftStorage.withTracked(spark) {
     println(s"Starting the processing of the file: ${args.inputFile}")
     val tweets = TweetSchema.read(spark, args.inputFile)
-    val g = TweetGraphPipeline.build(tweets, args.jaccardThreshold,
+    // built by the first graph output asked for: the build runs jobs, and
+    // a word-cloud-only run needs none of them
+    lazy val g = TweetGraphPipeline.build(tweets, args.jaccardThreshold,
       args.onlyTagsFromNotRetweetedPosts)
 
     if (args.saveWordCloud) {

@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   * mitigate with a per-key cap upstream if corpus demands), one explode,
   * one groupBy(src, dst) count. The tag mapping is the shared subtree the
   * reference recomputes per action (SURVEY.md §7.4 #6). This object
-  * caches nothing; [[TweetGraphPipeline]] caches the mapping (read by the
-  * report) and the unified edge relation holding the HT edges (read by
-  * the full-graph CSV, the report and the 2-hop neighbourhood).
+  * pins nothing; [[TweetGraphPipeline]] pins the mapping (read by the
+  * Jaccard self-join and the report) and the unified edge relation
+  * holding the HT edges (read by the full-graph CSV, the report and the
+  * 2-hop neighbourhood), each as an eagerly local-checkpointed one-node
+  * leaf rather than a lazy cache — see its scaladoc for the trade-offs.
   */
 object HashtagGraph {
 

@@ -89,13 +89,19 @@ object JaccardGraph {
     * into `(src, dst, <carry>1, <carry>2, shared)`, pairs below
     * `minShared` dropped. Carried columns join the grouping key, so each
     * must be a function of `id`.
+    *
+    * Both sides shuffle on `tag`. The second side's exchange is a
+    * `ReusedExchange` of the first only when the plans below the two
+    * exchanges are the same plain operators over the same leaf, as over
+    * the checkpointed tag mapping of [[TweetGraphPipeline]] (TweetGraphSpec
+    * checks it). Over a cached `InMemoryRelation` AQE gives each side its
+    * own table-cache stage, and the self-join runs two explodes and two
+    * tag exchanges.
     */
   private def sharedCounts(ut: DataFrame, minShared: Long, carry: Seq[String]): DataFrame = {
     val carried = carry.flatMap(c => Seq(col(s"x.$c").as(s"${c}1"), col(s"y.$c").as(s"${c}2")))
-    // SHUFFLE_MERGE: with both (identical) sides shuffled on tag the
-    // exchanges collapse into one reused exchange — a broadcast self-join
-    // would execute the upstream tag pipeline twice, and a corpus-side
-    // build is unbroadcastable at scale anyway
+    // SHUFFLE_MERGE: a broadcast self-join would execute the upstream tag
+    // pipeline twice, and a corpus-side build is unbroadcastable at scale
     ut.as("x").hint("SHUFFLE_MERGE")
       .join(ut.as("y").hint("SHUFFLE_MERGE"),
         col("x.tag") === col("y.tag") && col("x.id") > col("y.id"))

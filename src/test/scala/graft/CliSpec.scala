@@ -79,4 +79,14 @@ class CliSpec extends SparkTestBase {
     assert(rowsIn("wordCloud") === 6)
     assert(!spark.sparkContext.isStopped)
   }
+
+  test("a word-cloud-only run writes the word cloud and builds no graph") {
+    val out = java.nio.file.Files.createTempDirectory("cliwc").toString
+    val actions = actionsDuring(Main.run(spark, Main.parse(Array(
+      "src/test/resources/tweets.jsonl", "--output-path", out, "--save-word-cloud"))))
+    assert(!actions.exists(_._1 == "localCheckpoint"), "the graph was built")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.read.option("header", "true").csv(s"$out/wordCloud").count() === 6)
+    assert(!new java.io.File(s"$out/gFull").exists())
+  }
 }

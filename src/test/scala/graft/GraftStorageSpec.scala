@@ -81,6 +81,31 @@ class GraftStorageSpec extends SparkTestBase {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  test("clear releases a tracked checkpoint by its handle while another session tracks a persist") {
+    import spark.implicits._
+    val other = spark.newSession()
+    val theirs = GraftStorage.persisted({ val s = other; import s.implicits._
+      Seq(4, 5).toDF("y") })
+    assert(theirs.count() === 2)
+    val mine = Seq(1, 2, 3).toDF("x").checkpointTracked()
+    val mineRdd = mine.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      case p => fail(s"checkpointTracked did not return a leaf: $p")
+    }
+    assert(GraftStorage.trackedCount(spark) === 1)
+    assert(spark.sparkContext.getPersistentRDDs.contains(mineRdd))
+    // the sweep is skipped (`other` tracks a handle), so only the
+    // handle release can free the checkpoint
+    GraftStorage.clear(spark)
+    assert(GraftStorage.trackedCount(spark) === 0)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(mineRdd),
+      "the tracked checkpoint outlived clear")
+    assert(theirs.storageLevel.useMemory, "other session's tracked persist was cross-released")
+    assert(theirs.count() === 2)
+    GraftStorage.clear(other)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("withTracked releases pinned blocks on exit — no explicit clear") {
     import spark.implicits._
     // a library caller composing a pin-returning entry point and never

@@ -2,12 +2,15 @@ package graft
 
 import graft.ops._
 import graft.tweets.TweetSchema
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
@@ -151,49 +154,70 @@ class TweetGraphSpec extends SparkTestBase {
       Set("cafe", "rust", "go", "x1", "x2", "x3"))
   }
 
-  /** Every node of an executed plan, paired with whether it sits inside
-    * the plan behind a cached relation. */
-  private def nodes(p: SparkPlan, inCache: Boolean = false): Seq[(SparkPlan, Boolean)] = {
+  /** Every node of an executed plan, the plans behind cached relations
+    * included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan -> inCache)
-      case q: QueryStageExec => Seq(q.plan -> inCache)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan -> true)
-      case other => (other.children ++ other.subqueries).map(_ -> inCache)
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case other => other.children ++ other.subqueries
     }
-    (p -> inCache) +: kids.flatMap { case (k, c) => nodes(k, c) }
+    p +: kids.flatMap(nodes)
   }
+
+  private def allNamed(keys: Seq[Expression], name: String) =
+    keys.nonEmpty && keys.forall {
+      case a: Attribute => a.name == name
+      case _ => false
+    }
 
   /** The Jaccard layer's self-join on `tag`, in whatever join form. */
   private def isTagJoin(p: SparkPlan): Boolean = p match {
-    case j: BaseJoinExec =>
-      Seq(j.leftKeys, j.rightKeys).forall(ks => ks.nonEmpty && ks.forall {
-        case a: Attribute => a.name == "tag"
-        case _ => false
-      })
+    case j: BaseJoinExec => allNamed(j.leftKeys, "tag") && allNamed(j.rightKeys, "tag")
     case _ => false
   }
 
-  test("report, vertices and 2-hop edges read the cached edge relation") {
+  private def hashedOnTag(p: SparkPlan): Boolean = p.outputPartitioning match {
+    case h: HashPartitioning => allNamed(h.expressions, "tag")
+    case _ => false
+  }
+
+  /** The RDD behind a pinned relation, whose plan must be one leaf. */
+  private def leafRdd(df: DataFrame): RDD[_] = df.queryExecution.logical match {
+    case lr: LogicalRDD => lr.rdd
+    case other => fail(s"not a one-node checkpoint leaf:\n$other")
+  }
+
+  private def scansOf(df: DataFrame): Seq[Int] =
+    nodes(df.queryExecution.executedPlan).collect { case s: RDDScanExec => s.rdd.id }
+
+  test("report, vertices and 2-hop edges scan the pinned edge leaf; none plans a tag join") {
     val g = TweetGraphPipeline.build(tweets)
-    def builderOf(df: DataFrame) = nodes(df.queryExecution.executedPlan).collectFirst {
-      case (m: InMemoryTableScanExec, false) => m.relation.cacheBuilder
-    }
-    val edgeCache = builderOf(g.full.edges)
-    assert(edgeCache.isDefined, "full.edges is not a cached relation")
+    val edgeRdd = leafRdd(g.full.edges)
     for ((name, df) <- Seq("report" -> g.report, "full.vertices" -> g.full.vertices,
                            "neighbours.edges" -> g.neighbours("1").edges)) {
       df.collect()
-      val plan = nodes(df.queryExecution.executedPlan)
-      assert(plan.exists {
-        case (m: InMemoryTableScanExec, _) => m.relation.cacheBuilder eq edgeCache.get
-        case _ => false
-      }, s"$name does not scan the cached edge relation")
-      assert(!plan.exists { case (p, inCache) => !inCache && isTagJoin(p) },
-        s"$name plans the tag self-join outside a cached plan")
-      if (name == "full.vertices")
-        assert(plan.exists { case (p, inCache) => inCache && isTagJoin(p) },
-          "the tag self-join is not found even inside the cached plan")
+      assert(scansOf(df).contains(edgeRdd.id), s"$name does not scan the pinned edge relation")
+      assert(!nodes(df.queryExecution.executedPlan).exists(isTagJoin),
+        s"$name plans the tag self-join")
     }
+    // positive control: the walk finds the tag join where one is planned
+    val unpinned = JaccardGraph.edges(g.userTags)
+    unpinned.collect()
+    assert(nodes(unpinned.queryExecution.executedPlan).exists(isTagJoin),
+      "the tag self-join is not found in the plan of the unpinned Jaccard layer")
+  }
+
+  test("the pipeline's Jaccard self-join runs one tag exchange; the other side reuses it") {
+    val actions = actionsDuring(TweetGraphPipeline.build(tweets))
+    // the build's two actions pin the tag mapping and the edge relation
+    assert(actions.map(_._1) === Seq("localCheckpoint", "localCheckpoint"))
+    val joins = actions.map(_._2).filter(p => nodes(p).exists(isTagJoin))
+    assert(joins.length === 1, "the tag self-join did not run in exactly one action")
+    val plan = nodes(joins.head)
+    assert(plan.count { case e: ShuffleExchangeExec => hashedOnTag(e); case _ => false } === 1)
+    assert(plan.count { case r: ReusedExchangeExec => hashedOnTag(r.child); case _ => false } === 1)
   }
 
   test("report on a hand-checked corpus; no aggregate groups on an array") {
@@ -214,23 +238,30 @@ class TweetGraphSpec extends SparkTestBase {
       ("50", "[p,q]", "[]", "[]", "[40]"),        // ... and from src
       ("60", "[solo]", "[]", "[]", "[]")))
     val arrayKeyed = nodes(g.report.queryExecution.executedPlan).collect {
-      case (a: BaseAggregateExec, _) if a.groupingExpressions.exists(_.dataType.isInstanceOf[ArrayType]) => a
+      case a: BaseAggregateExec if a.groupingExpressions.exists(_.dataType.isInstanceOf[ArrayType]) => a
     }
     assert(arrayKeyed.isEmpty, s"aggregates grouping on an array: ${arrayKeyed.map(_.nodeName)}")
   }
 
-  test("the edge cache holds shuffle-partitions partitions; vertices scan it once") {
+  test("the edge leaf holds shuffle-partitions partitions; vertices scan it once") {
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val g = TweetGraphPipeline.build(tweets)
-    assert(g.full.edges.rdd.getNumPartitions ===
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val edgeRdd = leafRdd(g.full.edges)
+    // AQE coalesces each tiny layer to fewer partitions; the cap holds
+    assert(edgeRdd.getNumPartitions <= partitions)
+    // uncoalesced, the union of the three layers has 3× the partitions,
+    // and the cap is what brings the leaf back to the session's count
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try assert(leafRdd(TweetGraphPipeline.build(tweets).full.edges).getNumPartitions === partitions)
+    finally spark.conf.unset(key)
     val v = g.full.vertices
     v.collect()
-    val scans = nodes(v.queryExecution.executedPlan).collect {
-      case (m: InMemoryTableScanExec, false) => m
-    }
-    assert(scans.length === 1)
+    assert(scansOf(v) === Seq(edgeRdd.id))
   }
 
+  // last: clearing releases the pins of `graphs` too, and a released
+  // checkpoint cannot be read again
   test("a four-output run leaves no persisted RDDs after GraftStorage.clear") {
     val out = java.nio.file.Files.createTempDirectory("fouroutputs").toString
     val g = TweetGraphPipeline.build(tweets)
@@ -238,7 +269,13 @@ class TweetGraphSpec extends SparkTestBase {
     g.full.save(s"$out/gFull", "g")
     Report.save(g.report, out)
     g.neighbours("1").save(s"$out/id_neighbours_1", "id")
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    val pinned = Seq(g.userTags, g.full.edges).map(leafRdd(_).id)
+    assert(pinned.forall(spark.sparkContext.getPersistentRDDs.contains))
+    // the release of the tracked handles alone frees the pins
+    GraftStorage.clear(spark, sweepCheckpoints = false)
+    assert(GraftStorage.trackedCount(spark) === 0)
+    assert(!pinned.exists(spark.sparkContext.getPersistentRDDs.contains),
+      "a pinned leaf outlived the release of its handle")
     GraftStorage.clear(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
