@@ -192,7 +192,7 @@ class TweetGraphSpec extends SparkTestBase {
   private def scansOf(df: DataFrame): Seq[Int] =
     nodes(df.queryExecution.executedPlan).collect { case s: RDDScanExec => s.rdd.id }
 
-  test("report, vertices and 2-hop edges scan the pinned edge leaf; none plans a tag join") {
+  test("report, vertices and 2-hop edges read the cached edge relation") {
     val g = TweetGraphPipeline.build(tweets)
     val edgeRdd = leafRdd(g.full.edges)
     for ((name, df) <- Seq("report" -> g.report, "full.vertices" -> g.full.vertices,
